@@ -45,12 +45,7 @@ object Explain {
     // "what's wrong" #1: the artifact record must keep the at-scale plan
     // reviewable).
     if (sys.env.get("SPARK_GRAFT_FORCE_DIST").contains("1"))
-      Seq("bpe.localMaxWords", "cc.localMaxEdges", "coreset.localMaxPairs",
-        "gd.localMaxRows", "graphann.localMaxBase", "graphann.localMaxEdges",
-        "lloyd.localMaxVecs", "lpa.localMaxEdges", "lpa.localMaxNodes",
-        "mmr.localMaxPairs", "pr.localMaxEdges", "pr.localMaxNodes",
-        "viterbi.localMaxWords", "walks.localMaxEdges")
-        .foreach(c => spark.conf.set(s"spark.graft.$c", "0"))
+      SparkEntry.SizeGateConfs.foreach(spark.conf.set(_, "0"))
     names.foreach { n =>
       println(s"\n========== $n ==========")
       SparkEntry.queries(n)(spark, sfDir).explain("formatted")

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Distributed connected components by alternating star contraction —
@@ -50,15 +50,18 @@ object ConnectedComponents {
     * contraction loop pays ~3 bounded jobs per alternation (checkpoint,
     * convergence count, except-all), which DOMINATES wall time when the
     * edge list is metadata-sized — the common case for near-dup pair
-    * graphs, whose size tracks the duplicate rate, not the corpus. Below
-    * the gate the canonical edge list is collected once (≤ maxEdges rows
-    * — the same measured-rowcount discipline as the repo's broadcast
-    * gates) and solved by union-find; the labeling is IDENTICAL (both
-    * paths label every edge-touched node with its component minimum —
-    * spec-pinned equal on the same fixtures). Past the gate the
-    * alternating contraction runs unchanged — the 100 TB path. Default
-    * 1M edges ≈ tens of MB on the driver; raise on a production driver
-    * via the conf. */
+    * graphs, whose size tracks the duplicate rate, not the corpus. The
+    * gate is ONE bounded probe, `limit(maxEdges + 1).collect()` of the
+    * canonical edge list (at most maxEdges + 1 rows ever reach the
+    * driver — the probe discipline of every other size gate): if it
+    * comes back with ≤ maxEdges rows, those rows ARE the edge list and
+    * union-find solves it with no further job; the labeling is IDENTICAL
+    * (both paths label every edge-touched node with its component
+    * minimum — spec-pinned equal on the same fixtures, gate on and off).
+    * Past the gate the alternating contraction runs unchanged — the
+    * 100 TB path. A value of 0 (`SPARK_GRAFT_FORCE_DIST`) skips the
+    * probe. Default 1M edges ≈ tens of MB on the driver; raise on a
+    * production driver via the conf. */
   val LocalMaxEdgesConf = "spark.graft.cc.localMaxEdges"
   val LocalMaxEdgesDefault = 1000000L
 
@@ -72,7 +75,11 @@ object ConnectedComponents {
     val canon = canonical(edges0)
     val maxLocal =
       spark.conf.get(LocalMaxEdgesConf, LocalMaxEdgesDefault.toString).toLong
-    if (canon.count() <= maxLocal) localSolve(canon) else contract(canon)._1
+    if (maxLocal > 0 && maxLocal <= Int.MaxValue - 1) {
+      val es = canon.limit(maxLocal.toInt + 1).collect()
+      if (es.length <= maxLocal) return localSolve(spark, es)
+    }
+    contract(canon)._1
   }
 
   /** The distributed contraction with the number of alternations used —
@@ -81,9 +88,9 @@ object ConnectedComponents {
   def run(edges0: DataFrame): (DataFrame, Int) = contract(canonical(edges0))
 
   /** Canonical undirected edge list (u < v), deduped, lineage cut — the
-    * shared entry for both solve paths (the gate count and the local
-    * collect both read the checkpointed blocks, never the pair-mining
-    * lineage twice). */
+    * shared entry for both solve paths (the gate probe and, past the
+    * gate, the contraction both read the checkpointed blocks, never the
+    * pair-mining lineage twice). */
   private def canonical(edges0: DataFrame): DataFrame = {
     val cols = edges0.columns
     edges0
@@ -94,13 +101,11 @@ object ConnectedComponents {
       .localCheckpoint()
   }
 
-  /** Driver-local union-find over a measured-small canonical edge list:
-    * one collect, zero further jobs. Attaching the larger root under the
-    * smaller keeps every root the component minimum, so the labeling is
-    * exactly the contraction's (node, min-of-component) set. */
-  private def localSolve(canon: DataFrame): DataFrame = {
-    val spark = canon.sparkSession
-    val es = canon.collect()
+  /** Driver-local union-find over the gate probe's canonical edge rows:
+    * zero further jobs. Attaching the larger root under the smaller keeps
+    * every root the component minimum, so the labeling is exactly the
+    * contraction's (node, min-of-component) set. */
+  private def localSolve(spark: SparkSession, es: Array[Row]): DataFrame = {
     val parent = new java.util.HashMap[Long, Long](es.length * 2)
     def find(x: Long): Long = {
       var r = x
@@ -115,8 +120,8 @@ object ConnectedComponents {
     }
     val nodes = new java.util.TreeSet[java.lang.Long]()
     es.foreach { row => nodes.add(row.getLong(0)); nodes.add(row.getLong(1)) }
-    val out = new java.util.ArrayList[org.apache.spark.sql.Row](nodes.size())
-    nodes.forEach { nd => out.add(org.apache.spark.sql.Row(nd.longValue(), find(nd))) }
+    val out = new java.util.ArrayList[Row](nodes.size())
+    nodes.forEach { nd => out.add(Row(nd.longValue(), find(nd))) }
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("node",
         org.apache.spark.sql.types.LongType, nullable = true),

@@ -47,7 +47,11 @@ object LogisticGD {
     * @param dims  feature count (x0 is conventionally the 1000-milli bias)
     * @param iters full-batch GD rounds
     * @param etaDen learning-rate denominator (η = 1/etaDen)
-    * @return final micro-scaled weights w0..w{dims-1} */
+    * @return final micro-scaled weights w0..w{dims-1}
+    * @throws IllegalArgumentException on either side of the size gate,
+    *         with the same message, when a row carries a null in
+    *         x0..x{dims-1} or y (SQL's `sum` would silently skip the row
+    *         while still counting it in n). */
   def train(feat: DataFrame, dims: Int, iters: Int, etaDen: Long = 2L): Array[Long] = {
     require(iters >= 1 && dims >= 1 && etaDen >= 1L)
     // Size gate for the driver-local replay (round 18, guide §1.2): each
@@ -81,6 +85,7 @@ object LogisticGD {
                          iters: Int, etaDen: Long): Array[Long] = {
     val n = rows.length.toLong
     require(n > 0, "empty feature table")
+    requireNoNulls(rows.count(r => (0 to dims).exists(r.isNullAt)).toLong, dims)
     val xs = rows.map(r => Array.tabulate(dims)(j => r.getLong(j)))
     val ys = rows.map(_.getLong(dims))
     var w = Array.fill(dims)(0L)
@@ -109,19 +114,30 @@ object LogisticGD {
   private[graft] def trainDistributed(feat: DataFrame, dims: Int, iters: Int,
                                       etaDen: Long): Array[Long] = {
     val f = feat.cache()
-    val n = f.count() // one scalar, once (the PageRank discipline)
-    require(n > 0, "empty feature table")
-    var w = Array.fill(dims)(0L)
-    for (_ <- 1 to iters) {
-      val g = residuals(f, w)
-        .agg(sum(expr("rq * x0")).as("g0"),
-          (1 until dims).map(j => sum(expr(s"rq * x$j")).as(s"g$j")): _*)
-        .collect()(0)
-      w = Array.tabulate(dims)(j => w(j) - Math.floorDiv(g.getLong(j), etaDen * n))
-    }
-    f.unpersist(false)
-    w
+    try {
+      // One scalar pair, once (the PageRank discipline): n and the rows
+      // carrying a null feature, which the local replay rejects too.
+      val anyNull = ((0 until dims).map(j => col(s"x$j")) :+ col("y"))
+        .map(_.isNull).reduce(_ || _)
+      val stats = f.agg(count(lit(1)), count(when(anyNull, 1))).collect()(0)
+      val n = stats.getLong(0)
+      require(n > 0, "empty feature table")
+      requireNoNulls(stats.getLong(1), dims)
+      var w = Array.fill(dims)(0L)
+      for (_ <- 1 to iters) {
+        val g = residuals(f, w)
+          .agg(sum(expr("rq * x0")).as("g0"),
+            (1 until dims).map(j => sum(expr(s"rq * x$j")).as(s"g$j")): _*)
+          .collect()(0)
+        w = Array.tabulate(dims)(j => w(j) - Math.floorDiv(g.getLong(j), etaDen * n))
+      }
+      w
+    } finally f.unpersist(false)
   }
+
+  private def requireNoNulls(nullRows: Long, dims: Int): Unit =
+    require(nullRows == 0,
+      s"$nullRows feature rows carry a null in x0..x${dims - 1} or y")
 
   /** Adds z (double), p (double), rq (milli Long residual p−y) under
     * weights `w` — the scoring pass shared by training and serving. */

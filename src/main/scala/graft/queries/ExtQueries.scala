@@ -3269,6 +3269,9 @@ object ExtQueries {
     (nodes, edges)
   }
 
+  /** qx108's size gate for the driver-local walk replay (edges). */
+  val WalksLocalMaxEdgesConf = "spark.graft.walks.localMaxEdges"
+
   /** qx108 — DETERMINISTIC RANDOM WALKS over the domain graph (the
     * DeepWalk/node2vec corpus-prep step, Perozzi et al. 2014, with the
     * repo's derandomization discipline): one walk of length ≤ 4 from
@@ -3297,8 +3300,7 @@ object ExtQueries {
     // — bit-equal by the same argument the oracle replay rests on (and
     // hash-pinned by the qx108/qx112 gate rows). Past the gate the
     // per-step loop below runs unchanged.
-    val maxLocal = spark.conf
-      .get("spark.graft.walks.localMaxEdges", "1000000").toLong
+    val maxLocal = spark.conf.get(WalksLocalMaxEdgesConf, "1000000").toLong
     if (maxLocal > 0 && maxLocal <= Int.MaxValue - 1) {
       val eArr = edges.select(col("u"), col("v")).limit(maxLocal.toInt + 1).collect()
       if (eArr.length <= maxLocal) {

@@ -88,6 +88,46 @@ class ConnectedComponentsSpec extends SparkTestBase {
     assert(folded.values.toSet == Set(0L), "bridge merge did not relabel cluster B")
   }
 
+  test("the one-probe size gate labels identically at every threshold") {
+    // connectedComponents probes the canonical edge list once with
+    // limit(max + 1): at max = the canonical count it solves locally, at
+    // count - 1 (and at 0, which skips the probe) it contracts.
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    val chain = (0L until 30L).sliding(2).map(p => (p(0), p(1))).toSeq
+    val two = (0L until 10L).sliding(2).map(p => (p(0), p(1))).toSeq ++
+      (20L until 30L).sliding(2).map(p => (p(1), p(0))) ++ Seq((3L, 4L), (25L, 20L))
+    val fixtures: Seq[(String, Seq[(Option[Long], Option[Long])])] = Seq(
+      "chain" -> chain.map { case (a, b) => (Some(a), Some(b)) },
+      "two components" -> two.map { case (a, b) => (Some(a), Some(b)) },
+      "empty" -> Seq.empty,
+      "null endpoint" -> Seq((Some(1L), None), (None, Some(2L)), (Some(2L), Some(3L))),
+      "self-loop" -> Seq((Some(5L), Some(5L)), (Some(6L), Some(7L)), (Some(7L), Some(7L))))
+    val prev = spark.conf.getOption(ConnectedComponents.LocalMaxEdgesConf)
+    try for ((name, edges) <- fixtures) {
+      val real = edges.collect { case (Some(a), Some(b)) if a != b => (a, b) }
+      val canonCount = real.map { case (a, b) => (a min b, a max b) }.distinct.size.toLong
+      val exp = unionFind(real)
+      def label(max: Option[Long]): (Map[Long, Long], Boolean) = {
+        max match {
+          case Some(m) => spark.conf.set(ConnectedComponents.LocalMaxEdgesConf, m.toString)
+          case None => spark.conf.unset(ConnectedComponents.LocalMaxEdgesConf)
+        }
+        val df = ConnectedComponents.connectedComponents(edges.toDF("a", "b"))
+        val local = df.queryExecution.analyzed.collectLeaves().forall(_.isInstanceOf[LocalRelation])
+        (df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap, local)
+      }
+      for ((max, wantLocal) <- Seq(Some(0L) -> false, Some(canonCount) -> (canonCount > 0),
+                                   Some(canonCount - 1) -> false, None -> true)) {
+        val (got, local) = label(max)
+        assert(got == exp, s"$name at max=$max")
+        assert(local == wantLocal, s"$name at max=$max took the ${if (local) "local" else "distributed"} branch")
+      }
+    } finally prev match {
+      case Some(v) => spark.conf.set(ConnectedComponents.LocalMaxEdgesConf, v)
+      case None => spark.conf.unset(ConnectedComponents.LocalMaxEdgesConf)
+    }
+  }
+
   test("empty and self-loop-only inputs produce empty labelings") {
     assert(ConnectedComponents.connectedComponents(
       Seq.empty[(Long, Long)].toDF("a", "b")).count() == 0)

@@ -73,6 +73,21 @@ class LogisticGDSpec extends SparkTestBase {
     }
   }
 
+  test("a null feature fails both gate branches with the same error") {
+    val withNull = fixtureDf.withColumn("x2",
+      when(col("id") === 17L, lit(null).cast("long")).otherwise(col("x2")))
+    val local = intercept[IllegalArgumentException](
+      LogisticGD.train(withNull, dims = 3, iters = 2))
+    val dist = intercept[IllegalArgumentException](
+      LogisticGD.trainDistributed(withNull, dims = 3, iters = 2, etaDen = 2L))
+    assert(local.getMessage == dist.getMessage)
+    assert(local.getMessage.contains("1 feature rows carry a null"))
+    val nullLabel = fixtureDf.withColumn("y",
+      when(col("id") < 2L, lit(null).cast("long")).otherwise(col("y")))
+    assert(intercept[IllegalArgumentException](LogisticGD.train(nullLabel, dims = 3, iters = 1))
+      .getMessage.contains("2 feature rows carry a null"))
+  }
+
   test("deterministic under repartitioning (gradient sums are exact Longs)") {
     val a = LogisticGD.train(fixtureDf.repartition(7), dims = 3, iters = 4)
     val b = LogisticGD.train(fixtureDf.repartition(1), dims = 3, iters = 4)
