@@ -59,7 +59,7 @@ object Bench {
     // untouched; this is an additions-only diagnostic mode, recorded as
     // BENCH_FULL_r18_dist.json when run.
     if (sys.env.get("SPARK_GRAFT_FORCE_DIST").contains("1"))
-      SparkEntry.SizeGateConfs.foreach(spark.conf.set(_, "0"))
+      SparkEntry.SizeGates.map(_.key).foreach(spark.conf.set(_, "0"))
     // Environment self-description at bench open (r16 verdict #2/#3):
     // load average + the fixed-work canary, BEFORE any query runs.
     val openLoad = loadJson()

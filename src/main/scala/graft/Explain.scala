@@ -45,7 +45,7 @@ object Explain {
     // "what's wrong" #1: the artifact record must keep the at-scale plan
     // reviewable).
     if (sys.env.get("SPARK_GRAFT_FORCE_DIST").contains("1"))
-      SparkEntry.SizeGateConfs.foreach(spark.conf.set(_, "0"))
+      SparkEntry.SizeGates.map(_.key).foreach(spark.conf.set(_, "0"))
     names.foreach { n =>
       println(s"\n========== $n ==========")
       SparkEntry.queries(n)(spark, sfDir).explain("formatted")

@@ -54,19 +54,18 @@ object BpeTrainer {
     * prefix). Split pattern is a regex on the Spark side — escape it. */
   private def symsCol: Column = expr("filter(split(seq, '[|]'), s -> s != '')")
 
-  /** Size gate for the driver-local training replay (round 17, guide
-    * §1.2): every merge step is one vocabulary-sized Spark job (pair
-    * count + argmax collect), so a `steps`-merge training is `steps`
-    * sequential jobs over a LEXICON-bounded table. Below the gate the
-    * initial state (word, cnt, seq — built distributed, so character
-    * splitting semantics stay Spark's) is collected once and the merges
-    * replay on the driver: the identical '|'-fold rewrite, exact Long
-    * pair counts, and the tiebreak compared in UTF-8 BYTE order (what
-    * both Spark and the DuckDB oracle sort strings by — Java's UTF-16
-    * compareTo would diverge past the BMP). Past the gate the
-    * per-step loop runs unchanged. */
-  val LocalMaxWordsConf = "spark.graft.bpe.localMaxWords"
-  val LocalMaxWordsDefault = 2000000L
+  /** Size gate for the driver-local training replay ([[SizeGate]]):
+    * every merge step is one vocabulary-sized Spark job (pair count +
+    * argmax collect), so a `steps`-merge training is `steps` sequential
+    * jobs over a LEXICON-bounded table. Below the gate the initial state
+    * (word, cnt, seq — built distributed, so character splitting
+    * semantics stay Spark's) is collected once and the merges replay on
+    * the driver: the identical '|'-fold rewrite, exact Long pair counts,
+    * and the tiebreak compared in UTF-8 BYTE order (what both Spark and
+    * the DuckDB oracle sort strings by — Java's UTF-16 compareTo would
+    * diverge past the BMP). Past the gate the per-step loop runs
+    * unchanged. */
+  val WordsGate = SizeGate("spark.graft.bpe.localMaxWords", 2000000L)
 
   private def utf8Less(a: String, b: String): Boolean = {
     val x = a.getBytes(java.nio.charset.StandardCharsets.UTF_8)
@@ -85,14 +84,9 @@ object BpeTrainer {
     * learned merge list and the final vocabulary state (word, cnt, seq) —
     * the per-word tokenization under the learned vocabulary. */
   def train(wordFreq: DataFrame, steps: Int): (Seq[Merge], DataFrame) = {
-    val spark = wordFreq.sparkSession
-    val maxW = spark.conf.get(LocalMaxWordsConf, LocalMaxWordsDefault.toString).toLong
-    if (maxW > 0 && maxW <= Int.MaxValue - 1) {
-      val sArr = initState(wordFreq).select(col("word"), col("cnt"), col("seq"))
-        .limit(maxW.toInt + 1).collect()
-      if (sArr.length <= maxW) return trainLocal(spark, sArr, steps)
-    }
-    trainDistributed(wordFreq, steps)
+    WordsGate.probe(initState(wordFreq).select(col("word"), col("cnt"), col("seq")))
+      .map(trainLocal(wordFreq.sparkSession, _, steps))
+      .getOrElse(trainDistributed(wordFreq, steps))
   }
 
   /** Driver-local replay of the EXACT distributed loop over a collected

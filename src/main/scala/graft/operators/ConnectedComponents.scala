@@ -46,24 +46,18 @@ object ConnectedComponents {
     * dedup keep-list downstream. */
   val MaxRounds = 30
 
-  /** Size gate for the driver-local solve (round 17, guide §1.2): the
+  /** Size gate for the driver-local solve ([[SizeGate]]): the
     * contraction loop pays ~3 bounded jobs per alternation (checkpoint,
     * convergence count, except-all), which DOMINATES wall time when the
     * edge list is metadata-sized — the common case for near-dup pair
     * graphs, whose size tracks the duplicate rate, not the corpus. The
-    * gate is ONE bounded probe, `limit(maxEdges + 1).collect()` of the
-    * canonical edge list (at most maxEdges + 1 rows ever reach the
-    * driver — the probe discipline of every other size gate): if it
-    * comes back with ≤ maxEdges rows, those rows ARE the edge list and
-    * union-find solves it with no further job; the labeling is IDENTICAL
-    * (both paths label every edge-touched node with its component
-    * minimum — spec-pinned equal on the same fixtures, gate on and off).
-    * Past the gate the alternating contraction runs unchanged — the
-    * 100 TB path. A value of 0 (`SPARK_GRAFT_FORCE_DIST`) skips the
-    * probe. Default 1M edges ≈ tens of MB on the driver; raise on a
+    * gate probes the canonical edge list: rows that pass ARE the edge
+    * list, and union-find solves it with no further job; the labeling is
+    * IDENTICAL (both paths label every edge-touched node with its
+    * component minimum — spec-pinned equal on the same fixtures, gate on
+    * and off). Default 1M edges ≈ tens of MB on the driver; raise on a
     * production driver via the conf. */
-  val LocalMaxEdgesConf = "spark.graft.cc.localMaxEdges"
-  val LocalMaxEdgesDefault = 1000000L
+  val EdgesGate = SizeGate("spark.graft.cc.localMaxEdges", 1000000L)
 
   /** (node, rep) for every node appearing in `edges0`, where `rep` is
     * the minimum node id of the node's connected component (isolated
@@ -71,15 +65,9 @@ object ConnectedComponents {
     * their own rep if needed). `edges0`'s first two columns are read as
     * the endpoints; self-loops are dropped. */
   def connectedComponents(edges0: DataFrame): DataFrame = {
-    val spark = edges0.sparkSession
     val canon = canonical(edges0)
-    val maxLocal =
-      spark.conf.get(LocalMaxEdgesConf, LocalMaxEdgesDefault.toString).toLong
-    if (maxLocal > 0 && maxLocal <= Int.MaxValue - 1) {
-      val es = canon.limit(maxLocal.toInt + 1).collect()
-      if (es.length <= maxLocal) return localSolve(spark, es)
-    }
-    contract(canon)._1
+    EdgesGate.probe(canon).map(localSolve(canon.sparkSession, _))
+      .getOrElse(contract(canon)._1)
   }
 
   /** The distributed contraction with the number of alternations used —

@@ -38,33 +38,23 @@ object CoresetSelect {
     * @return (cid, step, vec_id, gain) in pick order — gain is the
     *         marginal facility-location objective the pick added. */
   def greedy(cand0: DataFrame, pairs0: DataFrame, r: Int): DataFrame = {
-    // Size gate for the driver-local solve (round 17, guide §1.2): the
-    // unrolled plan pays one eager coverage checkpoint per step plus the
-    // two entry pins — per-round JOB latency over rows the CALLER already
-    // bounded to cells·C². Below the gate both tables are collected once
-    // (bounded probes: at most max+1 rows read) and the identical
-    // all-Long greedy — order-free gain sums, (gain DESC, vec_id ASC)
-    // ties — replays on the driver; spec-pinned equal to the unrolled
-    // plan. Past the gate the plan form runs unchanged.
-    val spark = cand0.sparkSession
-    val maxLocal = spark.conf.get(LocalMaxPairsConf, LocalMaxPairsDefault.toString).toLong
-    if (maxLocal > 0 && maxLocal <= Int.MaxValue - 1) {
-      val pArr = pairs0.select(col("cid"), col("i"), col("j"), col("simw"))
-        .limit(maxLocal.toInt + 1).collect()
-      if (pArr.length <= maxLocal) {
-        val cArr = cand0.select(col("cid"), col("vec_id"))
-          .limit(maxLocal.toInt + 1).collect()
-        if (cArr.length <= maxLocal)
-          return localGreedy(spark,
-            cArr.map(x => (x.getLong(0), x.getLong(1))),
-            pArr.map(x => (x.getLong(0), x.getLong(1), x.getLong(2), x.getLong(3))), r)
-      }
-    }
-    greedyDistributed(cand0, pairs0, r)
+    // Size gate for the driver-local solve ([[SizeGate]]): the unrolled
+    // plan pays one eager coverage checkpoint per step plus the two
+    // entry pins — per-round JOB latency over rows the CALLER already
+    // bounded to cells·C². Below the gate (pairs, then candidates) the
+    // identical all-Long greedy — order-free gain sums, (gain DESC,
+    // vec_id ASC) ties — replays on the driver; spec-pinned equal to the
+    // unrolled plan. Past the gate the plan form runs unchanged.
+    (for {
+      pArr <- PairsGate.probe(pairs0.select(col("cid"), col("i"), col("j"), col("simw")))
+      cArr <- PairsGate.probe(cand0.select(col("cid"), col("vec_id")))
+    } yield localGreedy(cand0.sparkSession,
+      cArr.map(x => (x.getLong(0), x.getLong(1))),
+      pArr.map(x => (x.getLong(0), x.getLong(1), x.getLong(2), x.getLong(3))), r))
+      .getOrElse(greedyDistributed(cand0, pairs0, r))
   }
 
-  val LocalMaxPairsConf = "spark.graft.coreset.localMaxPairs"
-  val LocalMaxPairsDefault = 2000000L
+  val PairsGate = SizeGate("spark.graft.coreset.localMaxPairs", 2000000L)
 
   /** Driver-local replay of the EXACT unrolled recurrence: per cell,
     * step t picks the available candidate maximizing

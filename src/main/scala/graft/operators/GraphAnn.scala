@@ -366,55 +366,36 @@ object GraphAnn {
           broadcast(base.agg(min("vec_id").as("vec_id"))))),
       beam, rounds, selfExclude)
 
-  /** Size gates for the driver-local beam replay (round 17, guide §1.2):
-    * each beam round is a graph join + vector join + broadcast + topk_by
-    * + lineage cut — per-round JOB latency that dominates when the
-    * CORPUS is metadata-sized. Below the gates the base vectors, graph
-    * and seeds are collected once (bounded probes) and the identical
-    * beam — long_dot in array order, the same CAST/sqrt cosine, cuts
-    * through the very same [[graft.functions.TopKBuffer]] — replays on
-    * the driver, bit-identical by construction (GraphAnnSpec pins
-    * equality against the distributed rounds). Past any gate the
-    * distributed rounds run unchanged — the 100 TB path, and the shape
-    * the 200k-asset door probes keep measuring (the default base gate
-    * sits below the probe corpus on purpose). */
-  val LocalMaxBaseConf = "spark.graft.graphann.localMaxBase"
-  val LocalMaxBaseDefault = 100000L
-  val LocalMaxEdgesConf = "spark.graft.graphann.localMaxEdges"
-  val LocalMaxEdgesDefault = 2000000L
+  /** Size gates for the driver-local beam replay ([[SizeGate]]): each
+    * beam round is a graph join + vector join + broadcast + topk_by +
+    * lineage cut — per-round JOB latency that dominates when the CORPUS
+    * is metadata-sized. Below the gates (base vectors, graph, seeds,
+    * then queries) the identical beam — long_dot in array order, the
+    * same CAST/sqrt cosine, cuts through the very same
+    * [[graft.functions.TopKBuffer]] — replays on the driver,
+    * bit-identical by construction (GraphAnnSpec pins equality against
+    * the distributed rounds). Past any gate the distributed rounds run
+    * unchanged — the 100 TB path, and the shape the 200k-asset door
+    * probes keep measuring (the default base gate sits below the probe
+    * corpus on purpose). */
+  val BaseGate = SizeGate("spark.graft.graphann.localMaxBase", 100000L)
+  val EdgesGate = SizeGate("spark.graft.graphann.localMaxEdges", 2000000L)
 
   private def searchSeeded(graph: DataFrame, base: DataFrame,
                            queries: DataFrame, seeded0: DataFrame,
                            beam: Int, rounds: Int,
                            selfExclude: Boolean): DataFrame = {
     require(rounds >= 1 && beam >= 1)
-    val spark = graph.sparkSession
-    val maxBase = spark.conf.get(LocalMaxBaseConf, LocalMaxBaseDefault.toString).toLong
-    val maxEdges = spark.conf.get(LocalMaxEdgesConf, LocalMaxEdgesDefault.toString).toLong
-    if (maxBase > 0 && maxEdges > 0 &&
-        maxBase <= Int.MaxValue - 1 && maxEdges <= Int.MaxValue - 1) {
-      val bArr = base.select(col("vec_id"), col("iv"), col("n2"))
-        .limit(maxBase.toInt + 1).collect()
-      if (bArr.length <= maxBase) {
-        val gArr = graph.select(col("u"), col("v")).limit(maxEdges.toInt + 1).collect()
-        if (gArr.length <= maxEdges) {
-          val sArr = seeded0.select(col("qid"), col("vec_id"))
-            .limit(maxEdges.toInt + 1).collect()
-          if (sArr.length <= maxEdges) {
-            // searchEntryMin/search callers give every query an
-            // entry-fallback seed, so qArr is bounded by the seed gate
-            // that just passed — but a direct searchSeeded caller makes
-            // no such promise, so probe it with the same bounded limit
-            // (r17 verdict; over the limit → the distributed rounds).
-            val qArr = queries.select(col("qid"), col("qiv"), col("qn2"))
-              .limit(maxEdges.toInt + 1).collect()
-            if (qArr.length <= maxEdges)
-              return localBeam(spark, bArr, gArr, sArr, qArr, beam, rounds, selfExclude)
-          }
-        }
-      }
-    }
-    searchSeededDistributed(graph, base, queries, seeded0, beam, rounds, selfExclude)
+    // searchEntryMin/search callers give every query an entry-fallback
+    // seed, so the queries are bounded by the seed gate — but a direct
+    // searchSeeded caller makes no such promise, so they are probed too.
+    (for {
+      bArr <- BaseGate.probe(base.select(col("vec_id"), col("iv"), col("n2")))
+      gArr <- EdgesGate.probe(graph.select(col("u"), col("v")))
+      sArr <- EdgesGate.probe(seeded0.select(col("qid"), col("vec_id")))
+      qArr <- EdgesGate.probe(queries.select(col("qid"), col("qiv"), col("qn2")))
+    } yield localBeam(graph.sparkSession, bArr, gArr, sArr, qArr, beam, rounds, selfExclude))
+      .getOrElse(searchSeededDistributed(graph, base, queries, seeded0, beam, rounds, selfExclude))
   }
 
   /** Driver-local replay of the EXACT distributed beam: same cosine

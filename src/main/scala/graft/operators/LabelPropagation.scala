@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Synchronous label propagation (Raghavan et al. 2007, "Near linear
@@ -56,40 +56,30 @@ object LabelPropagation {
   def run(nodes: DataFrame, edges: DataFrame, iters: Int,
           init: Option[DataFrame] = None): DataFrame = {
     require(iters >= 1, "need at least one round")
-    // Size gate for the driver-local replay (round 17, guide §1.2): each
+    // Size gates for the driver-local replay ([[SizeGate]]): each
     // synchronous round costs a join + two aggregations + a lineage cut —
     // per-round JOB latency that dominates wall time when the graph is
     // metadata-sized (LSH candidate graphs track the near-dup rate, not
-    // the corpus). Below the gate both tables are collected once
-    // (bounded: the probe reads at most max+1 rows, never a full count of
-    // a corpus-sized frame) and the identical integer vote — synchronous,
-    // self-inclusive, (count DESC, label ASC) — replays on the driver;
-    // spec-pinned equal to the distributed rounds. Past the gate the
-    // edge-shuffle rounds run unchanged — the 100 TB path. Defaults are
-    // driver-heap-sized; raise on a production driver via the confs.
-    val spark = nodes.sparkSession
-    val maxEdges =
-      spark.conf.get(LocalMaxEdgesConf, LocalMaxEdgesDefault.toString).toLong
-    val maxNodes =
-      spark.conf.get(LocalMaxNodesConf, LocalMaxNodesDefault.toString).toLong
-    if (maxEdges > 0 && maxNodes > 0 &&
-        maxEdges <= Int.MaxValue - 1 && maxNodes <= Int.MaxValue - 1) {
-      val eArr = edges.select(col("u"), col("v"))
-        .limit(maxEdges.toInt + 1).collect()
-      if (eArr.length <= maxEdges) {
-        val nArr = nodes.select(col("u")).limit(maxNodes.toInt + 1).collect()
-        if (nArr.length <= maxNodes)
-          return localRun(spark, nArr.map(_.getLong(0)),
-            eArr.map(r => (r.getLong(0), r.getLong(1))), iters, init)
-      }
-    }
-    runDistributed(nodes, edges, iters, init)
+    // the corpus). Below the gates the identical integer vote —
+    // synchronous, self-inclusive, (count DESC, label ASC) — replays on
+    // the driver; spec-pinned equal to the distributed rounds. The
+    // warm-start frame goes through the node gate too, so an over-limit
+    // init sends the whole run to the edge-shuffle rounds, the 100 TB
+    // path. Defaults are driver-heap-sized; raise on a production driver
+    // via the confs.
+    (for {
+      eArr <- EdgesGate.probe(edges.select(col("u"), col("v")))
+      nArr <- NodesGate.probe(nodes.select(col("u")))
+      initArr <- init.fold(Option(Option.empty[Array[Row]]))(
+        i => NodesGate.probe(i.select(col("u"), col("label"))).map(Some(_)))
+    } yield localRun(nodes.sparkSession, nArr.map(_.getLong(0)),
+      eArr.map(r => (r.getLong(0), r.getLong(1))), iters,
+      initArr.map(_.map(r => (r.getLong(0), r.getLong(1))))))
+      .getOrElse(runDistributed(nodes, edges, iters, init))
   }
 
-  val LocalMaxEdgesConf = "spark.graft.lpa.localMaxEdges"
-  val LocalMaxEdgesDefault = 1000000L
-  val LocalMaxNodesConf = "spark.graft.lpa.localMaxNodes"
-  val LocalMaxNodesDefault = 1000000L
+  val EdgesGate = SizeGate("spark.graft.lpa.localMaxEdges", 1000000L)
+  val NodesGate = SizeGate("spark.graft.lpa.localMaxNodes", 1000000L)
 
   /** Driver-local replay of the EXACT distributed dataflow — the same
     * vote multiset (each undirected edge delivers the neighbor's
@@ -98,14 +88,13 @@ object LabelPropagation {
     * All-integer, so the labeling is bit-identical to the rounds. */
   private def localRun(spark: org.apache.spark.sql.SparkSession,
                        nodeArr: Array[Long], edgeArr: Array[(Long, Long)],
-                       iters: Int, init: Option[DataFrame]): DataFrame = {
+                       iters: Int, init: Option[Array[(Long, Long)]]): DataFrame = {
     var labels = new java.util.HashMap[Long, Long](nodeArr.length * 2)
     init match {
       case None => nodeArr.foreach(u => labels.put(u, u))
       case Some(prev) =>
         val p = new java.util.HashMap[Long, Long]()
-        prev.select(col("u"), col("label")).collect()
-          .foreach(r => p.put(r.getLong(0), r.getLong(1)))
+        prev.foreach { case (u, l) => p.put(u, l) }
         nodeArr.foreach(u => labels.put(u, p.getOrDefault(u, u)))
     }
     val und = new Array[Long](edgeArr.length * 4) // (dst, src) both ways

@@ -54,29 +54,22 @@ object LogisticGD {
     *         while still counting it in n). */
   def train(feat: DataFrame, dims: Int, iters: Int, etaDen: Long = 2L): Array[Long] = {
     require(iters >= 1 && dims >= 1 && etaDen >= 1L)
-    // Size gate for the driver-local replay (round 18, guide §1.2): each
-    // GD round is one scan-and-all-reduce JOB whose latency dominates
-    // when the milli-feature table is small. Below the gate the features
-    // are collected once (bounded probe — at most max+1 rows read) and
-    // the identical update replays on the driver: z is the same
-    // left-to-right Long dot (order-free — no overflow by the scaladoc
-    // budget), σ̃ the same correctly-rounded IEEE ops in the same order,
-    // rq the same floor-quantization, and the gradient sums are exact
-    // Longs, so the weight trajectory is bit-identical (spec-pinned
-    // against [[trainDistributed]]). Past the gate the scan-per-round
-    // loop runs unchanged — the 100 TB path (features are corpus-sized).
-    val spark = feat.sparkSession
-    val maxLocal = spark.conf.get(LocalMaxRowsConf, LocalMaxRowsDefault.toString).toLong
-    if (maxLocal > 0 && maxLocal <= Int.MaxValue - 1) {
-      val cols = (0 until dims).map(j => col(s"x$j")) :+ col("y")
-      val rows = feat.select(cols: _*).limit(maxLocal.toInt + 1).collect()
-      if (rows.length <= maxLocal) return trainLocal(rows, dims, iters, etaDen)
-    }
-    trainDistributed(feat, dims, iters, etaDen)
+    // Size gate for the driver-local replay ([[SizeGate]]): each GD
+    // round is one scan-and-all-reduce JOB whose latency dominates when
+    // the milli-feature table is small. Below the gate the identical
+    // update replays on the driver: z is the same left-to-right Long dot
+    // (order-free — no overflow by the scaladoc budget), σ̃ the same
+    // correctly-rounded IEEE ops in the same order, rq the same
+    // floor-quantization, and the gradient sums are exact Longs, so the
+    // weight trajectory is bit-identical (spec-pinned against
+    // [[trainDistributed]]). Past the gate the scan-per-round loop runs
+    // unchanged — the 100 TB path (features are corpus-sized).
+    val cols = (0 until dims).map(j => col(s"x$j")) :+ col("y")
+    RowsGate.probe(feat.select(cols: _*)).map(trainLocal(_, dims, iters, etaDen))
+      .getOrElse(trainDistributed(feat, dims, iters, etaDen))
   }
 
-  val LocalMaxRowsConf = "spark.graft.gd.localMaxRows"
-  val LocalMaxRowsDefault = 2000000L
+  val RowsGate = SizeGate("spark.graft.gd.localMaxRows", 2000000L)
 
   /** Driver-local replay of the EXACT distributed round: same Long
     * margin, same rational sigmoid double ops, same milli quantization,

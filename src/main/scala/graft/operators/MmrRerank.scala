@@ -32,31 +32,22 @@ object MmrRerank {
     * @return (qid, step, vec_id, mmr), step 1..k in pick order; step 1
     *         is the plain top-1 (empty selected set ⇒ penalty 0). */
   def rerank(cand0: DataFrame, pairs0: DataFrame, k: Int, lambda: Double): DataFrame = {
-    // Size gate for the driver-local replay (round 17, guide §1.2): the
-    // unrolled plan re-references the pool k−1 times through anti-joins
-    // and bounded maxes — job latency over rows the caller already
-    // bounded to q·m². Below the gate (bounded limit-probes) both
-    // tables are collected once and the identical greedy replays on the
-    // driver: λ·rel − (1−λ)·pen in the same fixed parenthesization and
-    // the same IEEE ops, pen = max over picked (order-free), ties
-    // (mmr DESC, id ASC) — MmrRerankSpec pins local == plan form.
-    // Past the gate the unrolled plan runs unchanged.
-    val spark = cand0.sparkSession
-    val maxLocal = spark.conf.get(LocalMaxPairsConf, LocalMaxPairsDefault.toString).toLong
-    if (maxLocal > 0 && maxLocal <= Int.MaxValue - 1) {
-      val pArr = pairs0.select(col("qid"), col("va"), col("vb"), col("sim"))
-        .limit(maxLocal.toInt + 1).collect()
-      if (pArr.length <= maxLocal) {
-        val cArr = cand0.select(col("qid"), col("rk"), col("vec_id"), col("cosine"))
-          .limit(maxLocal.toInt + 1).collect()
-        if (cArr.length <= maxLocal) return localRerank(spark, cArr, pArr, k, lambda)
-      }
-    }
-    rerankDistributed(cand0, pairs0, k, lambda)
+    // Size gate for the driver-local replay ([[SizeGate]]): the unrolled
+    // plan re-references the pool k−1 times through anti-joins and
+    // bounded maxes — job latency over rows the caller already bounded
+    // to q·m². Below the gate (pairs, then candidates) the identical
+    // greedy replays on the driver: λ·rel − (1−λ)·pen in the same fixed
+    // parenthesization and the same IEEE ops, pen = max over picked
+    // (order-free), ties (mmr DESC, id ASC) — MmrRerankSpec pins local ==
+    // plan form. Past the gate the unrolled plan runs unchanged.
+    (for {
+      pArr <- PairsGate.probe(pairs0.select(col("qid"), col("va"), col("vb"), col("sim")))
+      cArr <- PairsGate.probe(cand0.select(col("qid"), col("rk"), col("vec_id"), col("cosine")))
+    } yield localRerank(cand0.sparkSession, cArr, pArr, k, lambda))
+      .getOrElse(rerankDistributed(cand0, pairs0, k, lambda))
   }
 
-  val LocalMaxPairsConf = "spark.graft.mmr.localMaxPairs"
-  val LocalMaxPairsDefault = 2000000L
+  val PairsGate = SizeGate("spark.graft.mmr.localMaxPairs", 2000000L)
 
   /** Driver-local replay of the EXACT unrolled recurrence — see
     * [[rerank]]'s gate note. A candidate with no pair row to any picked

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Distributed PageRank (Page et al. 1999) in EXACT integer arithmetic —
@@ -52,48 +52,28 @@ object PageRank {
           scale: Long = 1000000L, init: Option[DataFrame] = None): DataFrame = {
     require(iters >= 1, "need at least one iteration")
     require(scale % 100L == 0L, "scale must be a multiple of 100 (exact teleport term)")
-    // Size gate for the driver-local replay (round 17, guide §1.2): every
-    // power iteration costs two joins, a scalar cross-join and a lineage
-    // cut — per-round JOB latency that dominates when the graph is
+    // Size gates for the driver-local replay ([[SizeGate]]): every power
+    // iteration costs two joins, a scalar cross-join and a lineage cut —
+    // per-round JOB latency that dominates when the graph is
     // metadata-sized (a domain graph is bounded by the eTLD+1 space, not
-    // the corpus). Below the gate both tables are collected once (bounded
-    // probes — at most max+1 rows read, never a full count of an unsized
-    // frame) and the identical floor-division integer update replays on
-    // the driver, bit-equal by the same argument the oracle replay rests
-    // on. Past the gate the edge-shuffle rounds run unchanged — the
-    // 100 TB path for corpus-sized graphs.
-    val spark = nodes.sparkSession
-    val maxEdges =
-      spark.conf.get(LocalMaxEdgesConf, LocalMaxEdgesDefault.toString).toLong
-    val maxNodes =
-      spark.conf.get(LocalMaxNodesConf, LocalMaxNodesDefault.toString).toLong
-    if (maxEdges > 0 && maxNodes > 0 &&
-        maxEdges <= Int.MaxValue - 1 && maxNodes <= Int.MaxValue - 1) {
-      val eArr = edges.select(col("u"), col("v"))
-        .limit(maxEdges.toInt + 1).collect()
-      if (eArr.length <= maxEdges) {
-        val nArr = nodes.select(col("u")).limit(maxNodes.toInt + 1).collect()
-        if (nArr.length <= maxNodes) {
-          // The warm-start frame is caller-supplied — probe it with the
-          // same bounded limit as the node table instead of collecting
-          // it ungated inside the replay (r17 verdict; an over-limit
-          // init sends the whole run to the distributed rounds).
-          val initArr = init.map(_.select(col("u"), col("r"))
-            .limit(maxNodes.toInt + 1).collect())
-          if (initArr.forall(_.length <= maxNodes))
-            return localRun(spark, nArr.map(_.getLong(0)),
-              eArr.map(r => (r.getLong(0), r.getLong(1))), iters, scale,
-              initArr.map(_.map(r => (r.getLong(0), r.getLong(1)))))
-        }
-      }
-    }
-    runDistributed(nodes, edges, iters, scale, init)
+    // the corpus). Below the gates the identical floor-division integer
+    // update replays on the driver, bit-equal by the same argument the
+    // oracle replay rests on. The caller-supplied warm-start frame goes
+    // through the node gate too, so an over-limit init sends the whole
+    // run to the distributed rounds, the 100 TB path.
+    (for {
+      eArr <- EdgesGate.probe(edges.select(col("u"), col("v")))
+      nArr <- NodesGate.probe(nodes.select(col("u")))
+      initArr <- init.fold(Option(Option.empty[Array[Row]]))(
+        i => NodesGate.probe(i.select(col("u"), col("r"))).map(Some(_)))
+    } yield localRun(nodes.sparkSession, nArr.map(_.getLong(0)),
+      eArr.map(r => (r.getLong(0), r.getLong(1))), iters, scale,
+      initArr.map(_.map(r => (r.getLong(0), r.getLong(1))))))
+      .getOrElse(runDistributed(nodes, edges, iters, scale, init))
   }
 
-  val LocalMaxEdgesConf = "spark.graft.pr.localMaxEdges"
-  val LocalMaxEdgesDefault = 1000000L
-  val LocalMaxNodesConf = "spark.graft.pr.localMaxNodes"
-  val LocalMaxNodesDefault = 1000000L
+  val EdgesGate = SizeGate("spark.graft.pr.localMaxEdges", 1000000L)
+  val NodesGate = SizeGate("spark.graft.pr.localMaxNodes", 1000000L)
 
   /** Driver-local replay of the EXACT distributed update — floor
     * division on non-negative longs everywhere, contributions only from
@@ -123,7 +103,9 @@ object PageRank {
       var dang = 0L
       ranks.forEach((u, r) => if (!od.containsKey(u)) dang += r)
       val next = new java.util.HashMap[Long, Long](nodeArr.length * 2)
-      val dshare = dang / n
+      // An empty node table ranks nothing: the distributed rounds never
+      // evaluate `dg div n` on zero rows, so neither does the replay.
+      val dshare = if (n == 0L) 0L else dang / n
       nodeArr.foreach { u =>
         next.put(u, teleport + (85L * (inc.getOrDefault(u, 0L) + dshare)) / 100L)
       }

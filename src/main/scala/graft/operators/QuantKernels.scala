@@ -258,66 +258,62 @@ object QuantKernels {
       }.toDF("qid", "vec_id", "adc")
   }
 
-  /** Size gate for the driver-local training replay (round 17, guide
-    * §1.2): every Lloyd iteration — kernel or declarative — pays one
-    * full Spark job plus a K-row collect, so a `iters`-step training is
-    * `iters` sequential jobs even when the corpus slice would fit in a
-    * driver array. Below the gate [[trainLoop]] collects (vec_id, iv)
-    * once and replays the iterations with the very same [[bestCid]] /
-    * Long partial sums / truncating `div` mean / empty-cluster-keep
+  /** Size gate for the driver-local training replay ([[SizeGate]]):
+    * every Lloyd iteration — kernel or declarative — pays one full Spark
+    * job plus a K-row collect, so a `iters`-step training is `iters`
+    * sequential jobs even when the corpus slice would fit in a driver
+    * array. Below the gate [[trainLoop]] replays the iterations over the
+    * probed (vec_id, iv) rows with the very same [[bestCid]] / Long
+    * partial sums / truncating `div` mean / empty-cluster-keep
     * arithmetic (QuantKernelsSpec pins kernel == crossJoin == local).
     * Past the gate each iteration is one [[lloydIter]] pass — the
     * 100 TB path. */
-  val LocalMaxVecsConf = "spark.graft.lloyd.localMaxVecs"
-  val LocalMaxVecsDefault = 100000L
+  val VecsGate = SizeGate("spark.graft.lloyd.localMaxVecs", 100000L)
 
-  /** `iters` Lloyd iterations over `emb` from `seeds`, size-gated: one
-    * bounded collect + a driver replay below [[LocalMaxVecsConf]], the
-    * per-iteration [[lloydIter]] fold with its LocalRelation round-trip
-    * past it. Output schema matches `seeds` (cid, `subCol`, cv) with the
-    * caller's column datatypes preserved. */
+  /** `iters` Lloyd iterations over `emb` from `seeds`, size-gated: a
+    * driver replay below [[VecsGate]], the per-iteration [[lloydIter]]
+    * fold with its LocalRelation round-trip past it. Output schema
+    * matches `seeds` (cid, `subCol`, cv) with the caller's column
+    * datatypes preserved. */
   def trainLoop(emb: DataFrame, seeds: DataFrame, subCol: String,
                 dsub: Int, iters: Int): DataFrame = {
     if (iters <= 0) return seeds
     val spark = emb.sparkSession
-    val maxV = spark.conf.get(LocalMaxVecsConf, LocalMaxVecsDefault.toString).toLong
-    if (maxV > 0 && maxV <= Int.MaxValue - 1) {
-      val eArr = emb.select(col("vec_id"), col("iv")).limit(maxV.toInt + 1).collect()
-      if (eArr.length <= maxV) {
-        val ivs = eArr.map(_.getSeq[Long](1).toArray)
-        var b = collectBooks(seeds, subCol, dsub)
-        var it = 0
-        while (it < iters) { b = lloydLocalIter(ivs, b); it += 1 }
-        val subT = seeds.schema(subCol).dataType
-        val cidT = seeds.schema("cid").dataType
-        val out = new java.util.ArrayList[org.apache.spark.sql.Row]()
-        var sub = 0
-        while (sub < b.cents.length) {
-          var c = 0
-          while (c < b.cents(sub).length) {
-            val cidV: Any =
-              if (cidT == org.apache.spark.sql.types.IntegerType) c else c.toLong
-            val subV: Any =
-              if (subT == org.apache.spark.sql.types.IntegerType) sub else sub.toLong
-            out.add(org.apache.spark.sql.Row(cidV, subV, b.cents(sub)(c).toSeq))
-            c += 1
-          }
-          sub += 1
+    VecsGate.probe(emb.select(col("vec_id"), col("iv"))).map { eArr =>
+      val ivs = eArr.map(_.getSeq[Long](1).toArray)
+      var b = collectBooks(seeds, subCol, dsub)
+      var it = 0
+      while (it < iters) { b = lloydLocalIter(ivs, b); it += 1 }
+      val subT = seeds.schema(subCol).dataType
+      val cidT = seeds.schema("cid").dataType
+      val out = new java.util.ArrayList[org.apache.spark.sql.Row]()
+      var sub = 0
+      while (sub < b.cents.length) {
+        var c = 0
+        while (c < b.cents(sub).length) {
+          val cidV: Any =
+            if (cidT == org.apache.spark.sql.types.IntegerType) c else c.toLong
+          val subV: Any =
+            if (subT == org.apache.spark.sql.types.IntegerType) sub else sub.toLong
+          out.add(org.apache.spark.sql.Row(cidV, subV, b.cents(sub)(c).toSeq))
+          c += 1
         }
-        val schema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("cid", cidT, nullable = true),
-          org.apache.spark.sql.types.StructField(subCol, subT, nullable = true),
-          org.apache.spark.sql.types.StructField("cv",
-            org.apache.spark.sql.types.ArrayType(
-              org.apache.spark.sql.types.LongType, containsNull = true),
-            nullable = true)))
-        return spark.createDataFrame(out, schema)
+        sub += 1
       }
-    }
-    (1 to iters).foldLeft(seeds.select(col("cid"), col(subCol), col("cv"))) {
-      (books, _) =>
-        val step = lloydIter(emb, books, subCol, dsub)
-        spark.createDataFrame(java.util.Arrays.asList(step.collect(): _*), step.schema)
+      val schema = org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField("cid", cidT, nullable = true),
+        org.apache.spark.sql.types.StructField(subCol, subT, nullable = true),
+        org.apache.spark.sql.types.StructField("cv",
+          org.apache.spark.sql.types.ArrayType(
+            org.apache.spark.sql.types.LongType, containsNull = true),
+          nullable = true)))
+      spark.createDataFrame(out, schema)
+    }.getOrElse {
+      (1 to iters).foldLeft(seeds.select(col("cid"), col(subCol), col("cv"))) {
+        (books, _) =>
+          val step = lloydIter(emb, books, subCol, dsub)
+          spark.createDataFrame(java.util.Arrays.asList(step.collect(): _*), step.schema)
+      }
     }
   }
 

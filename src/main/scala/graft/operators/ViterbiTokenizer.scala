@@ -89,7 +89,7 @@ object ViterbiTokenizer {
   }
 
   // ------------------------------------------- driver-local replays
-  // Size gate (round 18, guide §1.2): the lexicon build is an
+  // Size gate ([[SizeGate]]): the lexicon build is an
   // explode+distinct+groupBy job chain and each segmentation table is
   // its own kernel job — per-JOB latency that dominates when the
   // DISTINCT-WORD table is metadata-sized (it is vocabulary-shaped at
@@ -102,8 +102,7 @@ object ViterbiTokenizer {
   // the mapPartitions kernel runs, and every count is an order-free
   // integer sum.
 
-  val LocalMaxWordsConf = "spark.graft.viterbi.localMaxWords"
-  val LocalMaxWordsDefault = 2000000L
+  val WordsGate = SizeGate("spark.graft.viterbi.localMaxWords", 2000000L)
 
   /** Driver-local replay of [[pieceVocab]]: distinct length-2..4
     * code-point substrings per word, counted over distinct words. */
@@ -167,58 +166,46 @@ object ViterbiTokenizer {
   }
 
   /** [[segments]] under the [[pieceVocab]] lexicon, with the size gate:
-    * below it the lexicon count and the DP run on the driver (bounded
-    * probe — at most max+1 distinct words read), bit-identical by the
-    * notes above; past it the explode/kernel spelling runs unchanged. */
+    * below it the lexicon count and the DP run on the driver over the
+    * probed distinct words, bit-identical by the notes above; past it
+    * the explode/kernel spelling runs unchanged. */
   def segmentsGated(words: DataFrame): DataFrame = {
     val spark = words.sparkSession
-    val maxLocal =
-      spark.conf.get(LocalMaxWordsConf, LocalMaxWordsDefault.toString).toLong
-    if (maxLocal > 0 && maxLocal <= Int.MaxValue - 1) {
-      val wArr = words.select(col("word")).limit(maxLocal.toInt + 1).collect()
-      if (wArr.length <= maxLocal) {
-        val ws = wArr.map(_.getString(0))
-        val vocab = pieceVocabLocal(ws)
-        val spark2 = spark
-        import spark2.implicits._
-        return ws.iterator.map { w =>
-          val (np, sc, cs) = segment(w, vocab)
-          (w, np, sc, cs)
-        }.toSeq.toDF("word", "n_pieces", "vit_score", "vit_sig")
-      }
-    }
-    segments(words, pieceVocab(words))
+    import spark.implicits._
+    WordsGate.probe(words.select(col("word"))).map { wArr =>
+      val ws = wArr.map(_.getString(0))
+      val vocab = pieceVocabLocal(ws)
+      ws.iterator.map { w =>
+        val (np, sc, cs) = segment(w, vocab)
+        (w, np, sc, cs)
+      }.toSeq.toDF("word", "n_pieces", "vit_score", "vit_sig")
+    }.getOrElse(segments(words, pieceVocab(words)))
   }
 
   /** The qx104 hard-EM seed+refined segmentation tables
     * ((seed, refined) per-word DP tables) with the size gate: below it
     * the vocab, alphabet, seed scores, E/M-step and both DPs replay on
-    * the driver from ONE bounded collect of the distinct-word frequency
-    * table; past it the original collect-vocab + kernel-job spelling
-    * runs unchanged (its M-step collect was already vocab-bounded). */
+    * the driver from the probed distinct-word frequency table; past it
+    * the original collect-vocab + kernel-job spelling runs unchanged
+    * (its M-step collect was already vocab-bounded). */
   def emSegTables(wordFreq: DataFrame): (DataFrame, DataFrame) = {
     val spark = wordFreq.sparkSession
-    val maxLocal =
-      spark.conf.get(LocalMaxWordsConf, LocalMaxWordsDefault.toString).toLong
-    if (maxLocal > 0 && maxLocal <= Int.MaxValue - 1) {
-      val wfArr = wordFreq.select(col("word"), col("freq"))
-        .limit(maxLocal.toInt + 1).collect()
-      if (wfArr.length <= maxLocal) {
-        val wf = wfArr.map(r => (r.getString(0), r.getLong(1)))
-        val ws = wf.map(_._1).toSeq
-        val s0 = initScores(pieceVocabLocal(ws), alphabetLocal(ws))
-        val s1 = emRefineLocal(wf, s0)
-        return (segTableLocal(spark, ws, s0), segTableLocal(spark, ws, s1))
-      }
+    WordsGate.probe(wordFreq.select(col("word"), col("freq"))).map { wfArr =>
+      val wf = wfArr.map(r => (r.getString(0), r.getLong(1)))
+      val ws = wf.map(_._1).toSeq
+      val s0 = initScores(pieceVocabLocal(ws), alphabetLocal(ws))
+      val s1 = emRefineLocal(wf, s0)
+      (segTableLocal(spark, ws, s0), segTableLocal(spark, ws, s1))
+    }.getOrElse {
+      val words = wordFreq.select("word")
+      val vocab = pieceVocab(words).collect().map(_.getString(0)).toSet
+      val alphabet = words.select(explode(expr(
+          "transform(sequence(1, length(word)), i -> substring(word, i, 1))")).as("piece"))
+        .distinct().collect().map(_.getString(0)).toSet
+      val s0 = initScores(vocab, alphabet)
+      val s1 = emRefine(wordFreq, s0)
+      (segmentsScored(words, s0), segmentsScored(words, s1))
     }
-    val words = wordFreq.select("word")
-    val vocab = pieceVocab(words).collect().map(_.getString(0)).toSet
-    val alphabet = words.select(explode(expr(
-        "transform(sequence(1, length(word)), i -> substring(word, i, 1))")).as("piece"))
-      .distinct().collect().map(_.getString(0)).toSet
-    val s0 = initScores(vocab, alphabet)
-    val s1 = emRefine(wordFreq, s0)
-    (segmentsScored(words, s0), segmentsScored(words, s1))
   }
 
   /** The substring lexicon: length-2..4 substrings present in ≥

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.{BloomFilter, Determinism}
-import graft.operators.{AhoCorasick, AudioFingerprint, BpeTrainer, CdcChunker, ConnectedComponents, CoresetSelect, DsirSelect, EmbeddingLsh, EmbeddingPca, EpochShuffle, GopherRules, GraphAnn, HilbertCurve, HtmlCodec, InvertedIndex, IvfAnn, LabelPropagation, LogisticGD, MixSchedule, MmrRerank, MultimodalCodec, OpqLayout, PageRank, Partitioning, ProductQuantizer, QuantKernels, RetrainTrigger, RobotsTxt, SaltedJoin, SimHashLsh, UniMax, ViterbiTokenizer, WarcCodec, WavCodec, ZOrderLayout}
+import graft.operators.{AhoCorasick, AudioFingerprint, BpeTrainer, CdcChunker, ConnectedComponents, CoresetSelect, DsirSelect, EmbeddingLsh, EmbeddingPca, EpochShuffle, GopherRules, GraphAnn, HilbertCurve, HtmlCodec, InvertedIndex, IvfAnn, LabelPropagation, LogisticGD, MixSchedule, MmrRerank, MultimodalCodec, OpqLayout, PageRank, Partitioning, ProductQuantizer, QuantKernels, RetrainTrigger, RobotsTxt, SaltedJoin, SimHashLsh, SizeGate, UniMax, ViterbiTokenizer, WarcCodec, WavCodec, ZOrderLayout}
 import graft.sources.Tables
 
 /** The large-scale training-data-pipeline operator family (builder brief +
@@ -3269,8 +3269,9 @@ object ExtQueries {
     (nodes, edges)
   }
 
-  /** qx108's size gate for the driver-local walk replay (edges). */
-  val WalksLocalMaxEdgesConf = "spark.graft.walks.localMaxEdges"
+  /** qx108's size gate for the driver-local walk replay (edges; the
+    * node table goes through the same limit). */
+  val WalksEdgesGate = SizeGate("spark.graft.walks.localMaxEdges", 1000000L)
 
   /** qx108 — DETERMINISTIC RANDOM WALKS over the domain graph (the
     * DeepWalk/node2vec corpus-prep step, Perozzi et al. 2014, with the
@@ -3292,80 +3293,75 @@ object ExtQueries {
   def qx108(spark: SparkSession, dir: String): DataFrame = {
     val P = 2147483647L
     val (nodes, edges) = domainGraph(spark, dir)
-    // Size gate for the driver-local walk replay (round 17, guide §1.2):
-    // each of the 4 steps is a frontier join + argmin + lineage cut over
-    // a DOMAIN-bounded graph. Below the gate (bounded limit-probes, the
-    // CC/LPA/PageRank discipline) the walks replay on the driver with
-    // the identical integer hash argmin, stop rule and Horner signature
-    // — bit-equal by the same argument the oracle replay rests on (and
-    // hash-pinned by the qx108/qx112 gate rows). Past the gate the
-    // per-step loop below runs unchanged.
-    val maxLocal = spark.conf.get(WalksLocalMaxEdgesConf, "1000000").toLong
-    if (maxLocal > 0 && maxLocal <= Int.MaxValue - 1) {
-      val eArr = edges.select(col("u"), col("v")).limit(maxLocal.toInt + 1).collect()
-      if (eArr.length <= maxLocal) {
-        val nArr = nodes.select(col("u")).limit(maxLocal.toInt + 1).collect()
-        if (nArr.length <= maxLocal) {
-          val adj = new java.util.HashMap[Long, scala.collection.mutable.ArrayBuffer[Long]]()
-          eArr.foreach { r =>
-            adj.computeIfAbsent(r.getLong(0),
-              _ => scala.collection.mutable.ArrayBuffer.empty[Long]) += r.getLong(1)
-          }
-          val out = new java.util.ArrayList[org.apache.spark.sql.Row]()
-          nArr.map(_.getLong(0)).sorted.foreach { start =>
-            var pos = start; var sig = start; var stopped = false
-            out.add(org.apache.spark.sql.Row(start, 0L, start, start))
-            var t = 1
-            while (t <= 4 && !stopped) {
-              val nb = adj.get(pos)
-              if (nb == null) stopped = true
-              else {
-                var bestV = 0L; var bestH = Long.MaxValue
-                nb.foreach { v =>
-                  val h = (pos * 1000003L + t.toLong * 8191L + v * 97L + 13L) % P
-                  if (h < bestH || (h == bestH && v < bestV)) { bestH = h; bestV = v }
-                }
-                pos = bestV
-                sig = (sig * 1009L + bestV) % P
-                out.add(org.apache.spark.sql.Row(start, t.toLong, pos, sig))
-              }
-              t += 1
+    // Size gate for the driver-local walk replay ([[SizeGate]]): each of the 4 steps is a frontier join + argmin + lineage cut over
+    // a DOMAIN-bounded graph. Below the gate (edges, then nodes) the
+    // walks replay on the driver with the identical integer hash argmin,
+    // stop rule and Horner signature — bit-equal by the same argument
+    // the oracle replay rests on (and hash-pinned by the qx108/qx112
+    // gate rows). Past the gate the per-step loop below runs unchanged.
+    (for {
+      eArr <- WalksEdgesGate.probe(edges.select(col("u"), col("v")))
+      nArr <- WalksEdgesGate.probe(nodes.select(col("u")))
+    } yield {
+      val adj = new java.util.HashMap[Long, scala.collection.mutable.ArrayBuffer[Long]]()
+      eArr.foreach { r =>
+        adj.computeIfAbsent(r.getLong(0),
+          _ => scala.collection.mutable.ArrayBuffer.empty[Long]) += r.getLong(1)
+      }
+      val out = new java.util.ArrayList[org.apache.spark.sql.Row]()
+      nArr.map(_.getLong(0)).sorted.foreach { start =>
+        var pos = start; var sig = start; var stopped = false
+        out.add(org.apache.spark.sql.Row(start, 0L, start, start))
+        var t = 1
+        while (t <= 4 && !stopped) {
+          val nb = adj.get(pos)
+          if (nb == null) stopped = true
+          else {
+            var bestV = 0L; var bestH = Long.MaxValue
+            nb.foreach { v =>
+              val h = (pos * 1000003L + t.toLong * 8191L + v * 97L + 13L) % P
+              if (h < bestH || (h == bestH && v < bestV)) { bestH = h; bestV = v }
             }
+            pos = bestV
+            sig = (sig * 1009L + bestV) % P
+            out.add(org.apache.spark.sql.Row(start, t.toLong, pos, sig))
           }
-          val lt = org.apache.spark.sql.types.LongType
-          val schema = org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("start", lt, nullable = true),
-            org.apache.spark.sql.types.StructField("step", lt, nullable = true),
-            org.apache.spark.sql.types.StructField("node", lt, nullable = true),
-            org.apache.spark.sql.types.StructField("sig", lt, nullable = true)))
-          return spark.createDataFrame(out, schema)
+          t += 1
         }
       }
+      val lt = org.apache.spark.sql.types.LongType
+      val schema = org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField("start", lt, nullable = true),
+        org.apache.spark.sql.types.StructField("step", lt, nullable = true),
+        org.apache.spark.sql.types.StructField("node", lt, nullable = true),
+        org.apache.spark.sql.types.StructField("sig", lt, nullable = true)))
+      spark.createDataFrame(out, schema)
+    }).getOrElse {
+      val edgesC = edges.cache()
+      var walks = nodes.select(col("u").as("start"), lit(0L).as("step"),
+        col("u").as("node"), col("u").as("sig"), lit(false).as("stopped"))
+      var out = walks
+      for (t <- 1 to 4) {
+        val frontier = walks.where(!col("stopped"))
+        val step = frontier
+          .join(edgesC.withColumnRenamed("u", "node"), Seq("node"), "left")
+          .withColumn("h",
+            pmod(col("node") * 1000003L + lit(t.toLong * 8191L) + col("v") * 97L + 13L, lit(P)))
+          .groupBy("start")
+          .agg(min(struct(col("h"), col("v"))).as("b"),
+            first(col("node")).as("prev"), first(col("sig")).as("psig"))
+          .select(col("start"), lit(t.toLong).as("step"),
+            coalesce(col("b.v"), col("prev")).as("node"),
+            pmod(col("psig") * 1009L + coalesce(col("b.v"), col("prev")), lit(P)).as("sig"),
+            col("b.v").isNull.as("stopped"))
+        walks = step.localCheckpoint()
+        out = out.unionByName(walks.where(!col("stopped")))
+      }
+      // every step is checkpointed — release the graph cache (the
+      // GraphAnn.search / PageRank discipline; same leak class audited r13)
+      edgesC.unpersist(false)
+      out.select(col("start"), col("step"), col("node"), col("sig"))
     }
-    val edgesC = edges.cache()
-    var walks = nodes.select(col("u").as("start"), lit(0L).as("step"),
-      col("u").as("node"), col("u").as("sig"), lit(false).as("stopped"))
-    var out = walks
-    for (t <- 1 to 4) {
-      val frontier = walks.where(!col("stopped"))
-      val step = frontier
-        .join(edgesC.withColumnRenamed("u", "node"), Seq("node"), "left")
-        .withColumn("h",
-          pmod(col("node") * 1000003L + lit(t.toLong * 8191L) + col("v") * 97L + 13L, lit(P)))
-        .groupBy("start")
-        .agg(min(struct(col("h"), col("v"))).as("b"),
-          first(col("node")).as("prev"), first(col("sig")).as("psig"))
-        .select(col("start"), lit(t.toLong).as("step"),
-          coalesce(col("b.v"), col("prev")).as("node"),
-          pmod(col("psig") * 1009L + coalesce(col("b.v"), col("prev")), lit(P)).as("sig"),
-          col("b.v").isNull.as("stopped"))
-      walks = step.localCheckpoint()
-      out = out.unionByName(walks.where(!col("stopped")))
-    }
-    // every step is checkpointed — release the graph cache (the
-    // GraphAnn.search / PageRank discipline; same leak class audited r13)
-    edgesC.unpersist(false)
-    out.select(col("start"), col("step"), col("node"), col("sig"))
   }
 
   /** qx112 — the DeepWalk pipeline CLOSED end-to-end (Perozzi et al.
@@ -3850,8 +3846,7 @@ object ExtQueries {
     val qterms = docs.where(col("doc_id") % 50 === 0 && col("doc_id") < 5000)
       .select(col("doc_id").as("qid"), explode(expr(WORDS)).as("word")).distinct()
     val terms = qterms.select("word").distinct()
-    val stats = docs.agg(count(lit(1)).as("n"),
-      sum(expr(s"CAST(greatest(size($WORDS), 0) AS BIGINT)")).as("sumdl"))
+    val stats = bm25CorpusStats(docs)
     // The tf BRANCH is partitioned by doc_id BEFORE the explode (round
     // 18, guide §2.2/§2.4): every word of a doc — and therefore every
     // (qid, doc) pair group and every per-qid topk bucket downstream —
@@ -3887,6 +3882,11 @@ object ExtQueries {
       .select(col("qid"), col("t.id").as("doc_id"),
         (col("p") + 1).cast("long").as("lex_rk"))
   }
+
+  /** [[bm25Top20]]'s corpus totals (n, sumdl) over (doc_id, text). */
+  private[graft] def bm25CorpusStats(docs: DataFrame): DataFrame =
+    docs.agg(count(lit(1)).as("n"),
+      sum(expr(s"CAST(greatest(size($WORDS), 0) AS BIGINT)")).as("sumdl"))
 
   /** RRF fusion of a dense and a lexical rank list (factored from
     * qx79, unchanged): both inputs are k·q rows — metadata-sized at

@@ -102,15 +102,15 @@ class ConnectedComponentsSpec extends SparkTestBase {
       "empty" -> Seq.empty,
       "null endpoint" -> Seq((Some(1L), None), (None, Some(2L)), (Some(2L), Some(3L))),
       "self-loop" -> Seq((Some(5L), Some(5L)), (Some(6L), Some(7L)), (Some(7L), Some(7L))))
-    val prev = spark.conf.getOption(ConnectedComponents.LocalMaxEdgesConf)
+    val prev = spark.conf.getOption(ConnectedComponents.EdgesGate.key)
     try for ((name, edges) <- fixtures) {
       val real = edges.collect { case (Some(a), Some(b)) if a != b => (a, b) }
       val canonCount = real.map { case (a, b) => (a min b, a max b) }.distinct.size.toLong
       val exp = unionFind(real)
       def label(max: Option[Long]): (Map[Long, Long], Boolean) = {
         max match {
-          case Some(m) => spark.conf.set(ConnectedComponents.LocalMaxEdgesConf, m.toString)
-          case None => spark.conf.unset(ConnectedComponents.LocalMaxEdgesConf)
+          case Some(m) => spark.conf.set(ConnectedComponents.EdgesGate.key, m.toString)
+          case None => spark.conf.unset(ConnectedComponents.EdgesGate.key)
         }
         val df = ConnectedComponents.connectedComponents(edges.toDF("a", "b"))
         val local = df.queryExecution.analyzed.collectLeaves().forall(_.isInstanceOf[LocalRelation])
@@ -123,8 +123,8 @@ class ConnectedComponentsSpec extends SparkTestBase {
         assert(local == wantLocal, s"$name at max=$max took the ${if (local) "local" else "distributed"} branch")
       }
     } finally prev match {
-      case Some(v) => spark.conf.set(ConnectedComponents.LocalMaxEdgesConf, v)
-      case None => spark.conf.unset(ConnectedComponents.LocalMaxEdgesConf)
+      case Some(v) => spark.conf.set(ConnectedComponents.EdgesGate.key, v)
+      case None => spark.conf.unset(ConnectedComponents.EdgesGate.key)
     }
   }
 

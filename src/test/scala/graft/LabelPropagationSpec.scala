@@ -96,6 +96,25 @@ class LabelPropagationSpec extends SparkTestBase {
     assert(localW === distW)
   }
 
+  test("a warm start over the node limit takes the distributed rounds") {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    // Six nodes pass the node gate at 6; a seven-row init does not, so
+    // the run must label exactly as runDistributed, on that branch.
+    val nodesDf = spark.range(6).select(col("id").as("u"))
+    val edgesDf = bridged.toDF("u", "v")
+    val init = (0L until 7L).map(u => (u, 9L - u % 2)).toDF("u", "label")
+    val dist = LabelPropagation.runDistributed(nodesDf, edgesDf, 2, Some(init))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    for ((max, wantLocal) <- Seq("6" -> false, "7" -> true))
+      withConf(LabelPropagation.NodesGate.key, Some(max)) {
+        val df = LabelPropagation.run(nodesDf, edgesDf, 2, Some(init))
+        val local = df.queryExecution.analyzed.collectLeaves()
+          .forall(_.isInstanceOf[LocalRelation])
+        assert(local == wantLocal, s"node limit $max took the wrong branch")
+        assert(df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap === dist)
+      }
+  }
+
   test("self-inclusion damps the synchronous two-coloring oscillation") {
     // On the single edge 0-1 WITHOUT self votes labels would swap forever:
     // after any odd round {0->1, 1->0}, after even rounds back. With

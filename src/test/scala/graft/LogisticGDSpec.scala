@@ -62,14 +62,14 @@ class LogisticGDSpec extends SparkTestBase {
     val local = LogisticGD.train(feat, dims = 5, iters = 5, etaDen = 2L)
     val dist = LogisticGD.trainDistributed(feat, dims = 5, iters = 5, etaDen = 2L)
     assert(local.toSeq === dist.toSeq)
-    val prev = spark.conf.getOption(LogisticGD.LocalMaxRowsConf)
+    val prev = spark.conf.getOption(LogisticGD.RowsGate.key)
     try {
-      spark.conf.set(LogisticGD.LocalMaxRowsConf, "0")
+      spark.conf.set(LogisticGD.RowsGate.key, "0")
       assert(LogisticGD.train(feat, dims = 5, iters = 5, etaDen = 2L).toSeq
         === dist.toSeq)
     } finally prev match {
-      case Some(v) => spark.conf.set(LogisticGD.LocalMaxRowsConf, v)
-      case None => spark.conf.unset(LogisticGD.LocalMaxRowsConf)
+      case Some(v) => spark.conf.set(LogisticGD.RowsGate.key, v)
+      case None => spark.conf.unset(LogisticGD.RowsGate.key)
     }
   }
 

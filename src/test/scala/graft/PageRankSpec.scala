@@ -46,6 +46,18 @@ class PageRankSpec extends SparkTestBase {
     assert(localW === distW)
   }
 
+  test("an empty graph ranks nothing on either side of the gate") {
+    val nodes = Seq.empty[Long].toDF("u")
+    val edges = Seq.empty[(Long, Long)].toDF("u", "v")
+    val ranks = for (max <- Seq(None, Some("0"))) yield
+      withConf(PageRank.NodesGate.key, max) {
+        withConf(PageRank.EdgesGate.key, max) {
+          PageRank.run(nodes, edges, iters = 3).collect().toSeq
+        }
+      }
+    assert(ranks == Seq(Seq.empty, Seq.empty))
+  }
+
   test("star-graph authority: the hub outranks every spoke") {
     // spokes all point at the hub; the hub links back to every spoke
     val nodes = (0L to 5L).toDF("u")

@@ -45,7 +45,7 @@ class QuantKernelsSpec extends SparkTestBase {
     val localFlat = IvfAnn.trainedCentroids(b, IvfAnn.centroids(spark, kFlat), iters = 2)
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1).toSeq).toMap
     try {
-      spark.conf.set(graft.operators.QuantKernels.LocalMaxVecsConf, "0")
+      spark.conf.set(graft.operators.QuantKernels.VecsGate.key, "0")
       assert(booksKey(IvfAnn.trainedImiCodebooks(b, k, iters = 2), "lvl") == localImi,
         "IMI train loop: local path diverged from the distributed fold")
       assert(booksKey(ProductQuantizer.booksN(spark, b), "sub") == localPq,
@@ -53,7 +53,7 @@ class QuantKernelsSpec extends SparkTestBase {
       assert(IvfAnn.trainedCentroids(b, IvfAnn.centroids(spark, kFlat), iters = 2)
         .collect().map(r => r.getLong(0) -> r.getSeq[Long](1).toSeq).toMap == localFlat,
         "flat train loop: local path diverged from the distributed fold")
-    } finally spark.conf.unset(graft.operators.QuantKernels.LocalMaxVecsConf)
+    } finally spark.conf.unset(graft.operators.QuantKernels.VecsGate.key)
     // and the flat case against its declarative lloydStep reference
     val ref = IvfAnn.trainedCentroidsCrossJoin(b, IvfAnn.centroids(spark, kFlat), iters = 2)
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1).toSeq).toMap

@@ -1,7 +1,5 @@
 package graft
 
-import scala.concurrent.duration._
-
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
@@ -11,7 +9,6 @@ import org.apache.parquet.schema.MessageTypeParser
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
-import org.scalatest.concurrent.Eventually._
 
 import graft.sources.Tables
 
@@ -91,22 +88,6 @@ class TablesSpec extends SparkTestBase {
         assert(rows(cached) == rows(inferredT), name)
       }
     }
-  }
-
-  /** Spark jobs launched by `body`. */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"graft-tables-${java.util.UUID.randomUUID()}"
-    sc.setJobGroup(group, "counted")
-    try body finally sc.clearJobGroup()
-    sc.setJobGroup(s"$group-marker", "marker")
-    try spark.range(1).collect() finally sc.clearJobGroup()
-    // Listener events arrive in order: once the marker's job is visible,
-    // every job `body` launched is too.
-    eventually(timeout(10.seconds)) {
-      assert(sc.statusTracker.getJobIdsForGroup(s"$group-marker").nonEmpty)
-    }
-    sc.statusTracker.getJobIdsForGroup(group).length
   }
 
   test("a repeat read of an unchanged table runs no Spark job") {

@@ -37,15 +37,15 @@ class ViterbiLocalSpec extends SparkTestBase {
 
   test("segmentsGated past the gate falls through to the distributed spelling") {
     val words = corpusWords.localCheckpoint()
-    val prev = spark.conf.getOption(ViterbiTokenizer.LocalMaxWordsConf)
+    val prev = spark.conf.getOption(ViterbiTokenizer.WordsGate.key)
     try {
-      spark.conf.set(ViterbiTokenizer.LocalMaxWordsConf, "0")
+      spark.conf.set(ViterbiTokenizer.WordsGate.key, "0")
       val forced = asMap(ViterbiTokenizer.segmentsGated(words))
-      spark.conf.unset(ViterbiTokenizer.LocalMaxWordsConf)
+      spark.conf.unset(ViterbiTokenizer.WordsGate.key)
       assert(forced === asMap(ViterbiTokenizer.segmentsGated(words)))
     } finally prev match {
-      case Some(v) => spark.conf.set(ViterbiTokenizer.LocalMaxWordsConf, v)
-      case None => spark.conf.unset(ViterbiTokenizer.LocalMaxWordsConf)
+      case Some(v) => spark.conf.set(ViterbiTokenizer.WordsGate.key, v)
+      case None => spark.conf.unset(ViterbiTokenizer.WordsGate.key)
     }
   }
 
@@ -56,15 +56,15 @@ class ViterbiLocalSpec extends SparkTestBase {
       .localCheckpoint()
     val (g0, g1) = ViterbiTokenizer.emSegTables(wordFreq)
     val (gm0, gm1) = (asMap(g0), asMap(g1))
-    val prev = spark.conf.getOption(ViterbiTokenizer.LocalMaxWordsConf)
+    val prev = spark.conf.getOption(ViterbiTokenizer.WordsGate.key)
     try {
-      spark.conf.set(ViterbiTokenizer.LocalMaxWordsConf, "0")
+      spark.conf.set(ViterbiTokenizer.WordsGate.key, "0")
       val (d0, d1) = ViterbiTokenizer.emSegTables(wordFreq)
       assert(gm0 === asMap(d0), "seed-round tables diverge")
       assert(gm1 === asMap(d1), "refined-round tables diverge")
     } finally prev match {
-      case Some(v) => spark.conf.set(ViterbiTokenizer.LocalMaxWordsConf, v)
-      case None => spark.conf.unset(ViterbiTokenizer.LocalMaxWordsConf)
+      case Some(v) => spark.conf.set(ViterbiTokenizer.WordsGate.key, v)
+      case None => spark.conf.unset(ViterbiTokenizer.WordsGate.key)
     }
   }
 
