@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators._
@@ -15,13 +14,7 @@ import graft.operators._
 object AdmitProbe {
   def main(args: Array[String]): Unit = {
     val probeDir = args.headOption.getOrElse("/tmp/probe500k")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession("graft-admit-probe")
     val raw = spark.read.parquet(s"$probeDir/embeddings.parquet").select(col("vec_id"))
       .withColumn("embedding", expr("transform(sequence(0, 63), dd -> CAST(((vec_id * 1009 + dd * 31 + 3) * 2654435761 % 2147483647 % 721 - 360) / 1000.0 AS FLOAT))"))
     val base = graft.queries.ExtQueries.intEmbeddingsFrom(raw).localCheckpoint()

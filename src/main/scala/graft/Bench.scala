@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.{Encoders, SparkSession}
+import org.apache.spark.sql.Encoders
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -44,22 +44,11 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // SPARK_GRAFT_FORCE_DIST=1 zeroes every size gate so the bench times
-    // the DISTRIBUTED spellings (round 18, r17 verdict "what's wrong"
-    // #1: the 100 TB path needs its own measured record). OFF by
-    // default — the driver's bench contract and its numbers are
-    // untouched; this is an additions-only diagnostic mode, recorded as
-    // BENCH_FULL_r18_dist.json when run.
-    if (sys.env.get("SPARK_GRAFT_FORCE_DIST").contains("1"))
-      SparkEntry.SizeGates.map(_.key).foreach(spark.conf.set(_, "0"))
+    // SPARK_GRAFT_FORCE_DIST=1 (off by default) times the distributed
+    // spelling of every size-gated query, the record kept as
+    // BENCH_FULL_r18_dist.json.
+    val spark = GraftSession("graft-bench")
+    val cpus = GraftSession.cpus(sys.env)
     // Environment self-description at bench open (r16 verdict #2/#3):
     // load average + the fixed-work canary, BEFORE any query runs.
     val openLoad = loadJson()
@@ -168,7 +157,7 @@ object Bench {
     // reps (default 3) and carry the whole rep list in the artifact;
     // headline ev_per_sec is the BEST rep (the throughput analog of the
     // query min) with the median alongside.
-    val streamParts = math.min(8, cpus.toInt)
+    val streamParts = math.min(8, cpus)
     val streamN = sys.env.getOrElse("SPARK_GRAFT_STREAM_N", "3").toInt
     def streamRep(rep: Int): Either[String, (Double, Double)] =
       try {
@@ -198,7 +187,7 @@ object Bench {
         Right((nEvents / wallSec, wallSec / nChunks))
       } catch { case e: Throwable =>
         Left(Option(e.getMessage).getOrElse(e.getClass.getName).takeWhile(_ != '\n').take(200))
-      } finally spark.conf.set("spark.sql.shuffle.partitions", cpus)
+      } finally spark.conf.set("spark.sql.shuffle.partitions", cpus.toString)
     // the streaming leg's own environment reading (r16 verdict #3: the
     // driver artifact's 2,700 ev/s median under contention must be
     // machine-readable as contended — batch queries may have run for

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Plan inspector: prints the formatted physical plan of each named query
   * (default: the scale-sensitive ones) so shuffle/broadcast/pushdown
@@ -31,21 +30,10 @@ object Explain {
         "qx110_graph_admit", "qx113_cell_graph", "qx116_community_cap",
         "qx118_ann_recall_audit", "qx119_shard_card_fold",
         "qx120_dedup_venn")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    // SPARK_GRAFT_FORCE_DIST=1 zeroes every size gate so the plans show
-    // the DISTRIBUTED spellings — the claimed 100 TB path — instead of
-    // the LocalTableScan the gates collapse to at test SFs (r17 verdict
-    // "what's wrong" #1: the artifact record must keep the at-scale plan
-    // reviewable).
-    if (sys.env.get("SPARK_GRAFT_FORCE_DIST").contains("1"))
-      SparkEntry.SizeGates.map(_.key).foreach(spark.conf.set(_, "0"))
+    // Under SPARK_GRAFT_FORCE_DIST=1 the plans show the distributed
+    // spellings (the 100 TB path) instead of the LocalTableScan the size
+    // gates collapse to at test SFs.
+    val spark = GraftSession("graft-explain")
     names.foreach { n =>
       println(s"\n========== $n ==========")
       SparkEntry.queries(n)(spark, sfDir).explain("formatted")

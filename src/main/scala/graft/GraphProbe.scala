@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.{EmbeddingLsh, GraphAnn}
@@ -42,15 +41,7 @@ object GraphProbe {
     val dir = args(0)
     val reps = if (args.length > 1) args(1).toInt else 3
     val deltaMod = if (args.length > 2) args(2).toLong else 7L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("graft-graph-probe")
     spark.range(1000).selectExpr("sum(id)").collect()
 
     def time[A](f: => A): (A, Double) = {

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.operators.HybridIndex
 
 /** Build-vs-serve decomposition of hybrid retrieval at probe scale —
@@ -20,15 +18,7 @@ object HybridServeProbe {
     val dir = args(0)
     val out = args(1)
     val reps = if (args.length > 2) args(2).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("graft-hybrid-serve-probe")
     spark.range(1000).selectExpr("sum(id)").collect()
 
     val t0 = System.nanoTime()

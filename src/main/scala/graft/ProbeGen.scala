@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Deterministic synthetic-document generator for out-of-band scale
@@ -25,16 +24,11 @@ object ProbeGen {
   def main(args: Array[String]): Unit = {
     val n = args(0).toLong
     val out = args(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("graft-probe-gen")
+    val cpus = GraftSession.cpus(sys.env)
 
     val V = 30000L
-    val docs = spark.range(0, n, 1, math.max(8, cpus.toInt * 2))
+    val docs = spark.range(0, n, 1, math.max(8, cpus * 2))
       .select(col("id").as("doc_id"))
       // Neighbor-copy dups: every 41st doc reuses the previous seed.
       .withColumn("seed",
@@ -59,7 +53,7 @@ object ProbeGen {
         concat(lit("src"), (col("seed") * 40503L % 101L % 20L)).as("source"),
         length(col("text")).cast("long").as("n_chars"))
 
-    docs.repartition(math.max(8, cpus.toInt * 2))
+    docs.repartition(math.max(8, cpus * 2))
       .write.mode("overwrite")
       .option("maxRecordsPerFile", 50000)
       .option("parquet.block.size", 16L * 1024 * 1024)
@@ -70,7 +64,7 @@ object ProbeGen {
     // vec = label-center (scaled hash per dim) + per-vector noise — so
     // assignment/purity paths see real structure. Deterministic, no RNG.
     val nVec = 2L * n / 5L
-    val emb = spark.range(0, nVec, 1, math.max(8, cpus.toInt * 2))
+    val emb = spark.range(0, nVec, 1, math.max(8, cpus * 2))
       .select(col("id").as("vec_id"))
       .withColumn("label", (col("vec_id") * 2654435761L % 97L % 10L).cast("int"))
       .withColumn("embedding", expr(
@@ -80,7 +74,7 @@ object ProbeGen {
           |  + ((vec_id * 1009 + d * 31 + 3) * 2654435761 % 2147483647 % 161 - 80) / 1000.0
           |AS FLOAT))""".stripMargin))
       .select(col("vec_id"), col("embedding"), col("label"))
-    emb.repartition(math.max(8, cpus.toInt * 2))
+    emb.repartition(math.max(8, cpus * 2))
       .write.mode("overwrite")
       .option("maxRecordsPerFile", 50000)
       .option("parquet.block.size", 16L * 1024 * 1024)

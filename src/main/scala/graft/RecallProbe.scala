@@ -125,14 +125,7 @@ object RecallProbe {
     val clusters = if (args.length > 1) args(1).toInt else 50
     val noiseScale = if (args.length > 2) args(2).toInt else 500
     val mode = if (args.length > 3) args(3) else "iso"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("graft-recall-probe")
 
     val base = (mode match {
       case "aniso" => anisoCorpus(spark, n, clusters, noiseScale)
@@ -369,15 +362,7 @@ object RecallProbe {
     * fixture (the hybrid needs text, which the fixtures don't carry). */
   private def hybridMain(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("graft-recall-probe-hybrid")
     def top10(df: DataFrame): Map[Long, Set[Long]] =
       df.select("qid", "doc_id").collect()
         .groupBy(_.getLong(0)).map { case (q, rs) => q -> rs.map(_.getLong(1)).toSet }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Encoders, SparkSession}
+import org.apache.spark.sql.Encoders
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -31,18 +31,12 @@ object StreamBisect {
       else Seq.fill(reps)(32)
     val keys = if (args.length > 2) args(2).toInt else 40
     val nEvents = if (args.length > 3) args(3).toInt else 40000
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("graft-stream-bisect")
     spark.range(1000).selectExpr("sum(id)").collect()
 
     (0 until reps).foreach { rep =>
       val p = parts(rep % parts.length)
+      // The state-partition count is the variable under test.
       spark.conf.set("spark.sql.shuffle.partitions", p.toString)
       implicit val sqlCtx = spark.sqlContext
       implicit val enc = Encoders.product[SensorEvent]

@@ -1,26 +1,12 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("graft-verify")
     new java.io.File(outDir).mkdirs()
-    // Compute the qx4/qx5/qx6/qx14 base derivations (word-hash and
-    // shingle rows) once for the whole run instead of once per query
-    // (round-4 verdict task #8). Opt-out via env for A/B timing.
-    if (!sys.env.get("SPARK_GRAFT_NO_SHARE").contains("1"))
-      queries.ExtQueries.enableSharedDerivations(spark, sfDir)
     // Iteration aid: SPARK_GRAFT_VERIFY_ONLY=qx52_audio_features,qx51_...
     // dumps only the named queries (oracle_sql.json still carries every
     // entry — the checker only compares queries that have an output dir).

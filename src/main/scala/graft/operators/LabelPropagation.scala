@@ -74,12 +74,18 @@ object LabelPropagation {
         i => NodesGate.probe(i.select(col("u"), col("label"))).map(Some(_)))
     } yield localRun(nodes.sparkSession, nArr.map(_.getLong(0)),
       eArr.map(r => (r.getLong(0), r.getLong(1))), iters,
-      initArr.map(_.map(r => (r.getLong(0), r.getLong(1))))))
+      initArr.map(warmStart)))
       .getOrElse(runDistributed(nodes, edges, iters, init))
   }
 
   val EdgesGate = SizeGate("spark.graft.lpa.localMaxEdges", 1000000L)
   val NodesGate = SizeGate("spark.graft.lpa.localMaxNodes", 1000000L)
+
+  /** Warm-start rows as the distributed left join sees them: a NULL
+    * `label` is absent (the node starts at its own id) and a NULL `u` joins
+    * no node, so both rows are dropped. */
+  private def warmStart(rows: Array[Row]): Array[(Long, Long)] =
+    rows.collect { case r if !r.isNullAt(0) && !r.isNullAt(1) => (r.getLong(0), r.getLong(1)) }
 
   /** Driver-local replay of the EXACT distributed dataflow — the same
     * vote multiset (each undirected edge delivers the neighbor's

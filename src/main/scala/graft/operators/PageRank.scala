@@ -68,12 +68,18 @@ object PageRank {
         i => NodesGate.probe(i.select(col("u"), col("r"))).map(Some(_)))
     } yield localRun(nodes.sparkSession, nArr.map(_.getLong(0)),
       eArr.map(r => (r.getLong(0), r.getLong(1))), iters, scale,
-      initArr.map(_.map(r => (r.getLong(0), r.getLong(1))))))
+      initArr.map(warmStart)))
       .getOrElse(runDistributed(nodes, edges, iters, scale, init))
   }
 
   val EdgesGate = SizeGate("spark.graft.pr.localMaxEdges", 1000000L)
   val NodesGate = SizeGate("spark.graft.pr.localMaxNodes", 1000000L)
+
+  /** Warm-start rows as the distributed left join sees them: a NULL
+    * `r` is absent (the node starts at `scale`) and a NULL `u` joins
+    * no node, so both rows are dropped. */
+  private def warmStart(rows: Array[Row]): Array[(Long, Long)] =
+    rows.collect { case r if !r.isNullAt(0) && !r.isNullAt(1) => (r.getLong(0), r.getLong(1)) }
 
   /** Driver-local replay of the EXACT distributed update — floor
     * division on non-negative longs everywhere, contributions only from

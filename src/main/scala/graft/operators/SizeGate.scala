@@ -11,7 +11,8 @@ import org.apache.spark.sql.{DataFrame, Row}
   * The probe discipline every gate shares: the limit is read from the
   * session conf `key` (else `default`); a limit ≤ 0 or ≥ `Int.MaxValue`
   * turns the gate off and skips the probe (no job — 0 is what
-  * `SPARK_GRAFT_FORCE_DIST` sets); otherwise one
+  * `SPARK_GRAFT_FORCE_DIST` sets, through [[graft.GraftSession]]);
+  * otherwise one
   * `limit(max + 1).collect()` runs, so at most max + 1 rows reach the
   * driver and no unsized frame is ever counted. Sites with several
   * gated inputs chain the probes, so a later probe runs only when every

@@ -30,50 +30,6 @@ import graft.sources.Tables
   */
 object ExtQueries {
 
-  // ---- session-shared base derivations (round-4 verdict task #8) --------
-
-  /** Opt-in share of the expensive per-corpus bases — (doc_id, pos, wh)
-    * word-hash rows (qx5/qx14, and the shingle derivation) and the
-    * distinct (doc_id, s) shingle rows (qx4/qx6, where qx6 re-runs qx4's
-    * whole chain for its candidates). The gate runner ([[graft.Verify]])
-    * computes each once per (session, dir) and persists; the queries
-    * pick the shared table up transparently. Standalone callers (and the
-    * bench, whose per-query numbers must stay honest) are unaffected. */
-  private val sharedDerivs =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-  private def sharedKey(kind: String, spark: SparkSession, dir: String) =
-    s"$kind|${System.identityHashCode(spark)}|$dir"
-  private def sharedOr(kind: String, spark: SparkSession, dir: String)
-                      (base: => DataFrame): DataFrame =
-    Option(sharedDerivs.get(sharedKey(kind, spark, dir))).getOrElse(base)
-
-  def enableSharedDerivations(spark: SparkSession, dir: String): Unit = {
-    sharedDerivs.computeIfAbsent(sharedKey("words", spark, dir), _ =>
-      wordHashRowsBase(spark, dir)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    sharedDerivs.computeIfAbsent(sharedKey("shingles", spark, dir), _ =>
-      shingleRowsBase(spark, dir)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    // The 8-word window-hash table feeds qx17 AND qx29 (round 6).
-    sharedDerivs.computeIfAbsent(sharedKey("windows", spark, dir), _ =>
-      windowHashRowsFrom(wordHashRows(spark, dir))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    // The duplicate-cluster labeling feeds qx20 AND qx22 (round 6); the
-    // contraction loop runs actions at construction, so sharing it
-    // saves a whole iterative job, not just a scan.
-    sharedDerivs.computeIfAbsent(sharedKey("duplabels", spark, dir), _ =>
-      dupLabelsBase(spark, dir)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-  }
-
-  def clearSharedDerivations(spark: SparkSession): Unit = {
-    val marker = s"|${System.identityHashCode(spark)}|"
-    sharedDerivs.keySet.removeIf { k =>
-      if (k.contains(marker)) { sharedDerivs.get(k).unpersist(); true }
-      else false
-    }
-  }
-
   /** Materialize INDEPENDENT legs concurrently (optimization round 17,
     * guide §2.6 "overlap independent jobs"): each thunk builds and
     * eagerly localCheckpoints its leg on its own driver thread, so one
@@ -117,9 +73,6 @@ object ExtQueries {
     * two lead()s, one distinct — all hash-partitioned on doc_id, the shape
     * that survives 100 TB. */
   private def shingleRows(spark: SparkSession, dir: String): DataFrame =
-    sharedOr("shingles", spark, dir)(shingleRowsBase(spark, dir))
-
-  private def shingleRowsBase(spark: SparkSession, dir: String): DataFrame =
     shingleRowsMultiset(spark, dir).distinct()
 
   /** The shingle rows BEFORE set-dedup — one window pass, already
@@ -141,9 +94,6 @@ object ExtQueries {
     * the simhash queries (qx5/qx14) all derive from; exactly the
     * [[WORD_HASHES]] multiset, exploded with positions. */
   private def wordHashRows(spark: SparkSession, dir: String): DataFrame =
-    sharedOr("words", spark, dir)(wordHashRowsBase(spark, dir))
-
-  private def wordHashRowsBase(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir)
       .select(col("doc_id"), posexplode(split(col("text"), " ")).as(Seq("pos", "w")))
       .where(length(col("w")) > 0)
@@ -633,14 +583,10 @@ object ExtQueries {
     * out of the lead() window already hash-partitioned by doc_id, and
     * the groupBy reuses that partitioning, collapsing the minhash path
     * to ONE exchange end-to-end (round-6: this was the qx4 drift fix —
-    * 1.34 → ~0.9 s at sf0.1). When the gate runner has the distinct
-    * table persisted ([[enableSharedDerivations]]), reuse it instead of
-    * recomputing the window. */
+    * 1.34 → ~0.9 s at sf0.1). */
   private def minhashed(spark: SparkSession, dir: String): DataFrame = {
     val mhCols = (0 until 16).map(minhash)
-    val rows = Option(sharedDerivs.get(sharedKey("shingles", spark, dir)))
-      .getOrElse(shingleRowsMultiset(spark, dir))
-    rows.groupBy("doc_id").agg(mhCols.head, mhCols.tail: _*)
+    shingleRowsMultiset(spark, dir).groupBy("doc_id").agg(mhCols.head, mhCols.tail: _*)
   }
 
   /** (doc_id, band, sig) LSH band-signature rows — 4 bands of 4 minhashes
@@ -681,9 +627,6 @@ object ExtQueries {
     * CTE (fine at oracle scale; the star contraction is the form that
     * survives 100 TB). */
   def qx20(spark: SparkSession, dir: String): DataFrame =
-    sharedOr("duplabels", spark, dir)(dupLabelsBase(spark, dir))
-
-  private def dupLabelsBase(spark: SparkSession, dir: String): DataFrame =
     ConnectedComponents.connectedComponents(qx4(spark, dir))
       .select(col("node").as("doc_id"), col("rep"))
 
@@ -704,7 +647,7 @@ object ExtQueries {
     * rep with a distinct-count. */
   def qx115(spark: SparkSession, dir: String): DataFrame = {
     val P = 2147483647L
-    val labels = sharedOr("duplabels", spark, dir)(dupLabelsBase(spark, dir))
+    val labels = qx20(spark, dir)
     val rep = Tables.documents(spark, dir).select(col("doc_id"))
       .join(labels, Seq("doc_id"), "left")
       .select(col("doc_id"), coalesce(col("rep"), col("doc_id")).as("rep"))
@@ -1411,7 +1354,7 @@ object ExtQueries {
   }
 
   private def windowHashRows(spark: SparkSession, dir: String): DataFrame =
-    sharedOr("windows", spark, dir)(windowHashRowsFrom(wordHashRows(spark, dir)))
+    windowHashRowsFrom(wordHashRows(spark, dir))
 
   def qx17(spark: SparkSession, dir: String): DataFrame = {
     val wins = windowHashRows(spark, dir)
@@ -1523,11 +1466,9 @@ object ExtQueries {
     * scale-safe order: cheap LSH recall first, exact verification on the
     * surviving pairs — never all-pairs). Emits pairs with J ≥ 0.5. */
   def qx6(spark: SparkSession, dir: String): DataFrame = {
-    // (A 100 TB dedup job would materialize the shingle table once and
-    // reuse it — that is exactly what [[enableSharedDerivations]] does
-    // for the gate runner. Standalone, the recompute is the better
-    // trade: an unconditional persist() measured as noise at bench
-    // scale and pins executor memory for later queries.)
+    // The shingle table is recomputed rather than persisted: a persist()
+    // measured as noise at bench scale and pins executor memory for
+    // later queries.
     val cands = qx4(spark, dir)
     val exploded = shingleRows(spark, dir)
     val sizes = exploded.groupBy("doc_id").agg(count(lit(1)).as("n"))

@@ -22,7 +22,7 @@ import org.apache.spark.sql.types.StructType
   * loaded schema and normalizes BOTH to the nanos-Long contract
   * (`unix_micros * 1000` is exact and fits a Long until 2262). The
   * NTZ→timestamp cast is wall-clock-identity because the session TZ is
-  * pinned UTC repo-wide (build.sbt javaOptions + every main's builder).
+  * pinned UTC for every session graft builds ([[graft.GraftSession]]).
   *
   * Schema per version: a schema-less `spark.read.parquet` runs a footer-
   * inference job on every call (~90 ms at test scale, against ~11 ms for

@@ -5,6 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQuery
 
+import graft.GraftSession
 import graft.functions.BloomFilter
 
 /** RocksDB SOAK of the composed ingest door (round-8 verdict #7): the
@@ -19,6 +20,14 @@ import graft.functions.BloomFilter
   * (default /root/testdata/sf0.01 — 10× the spec corpus — in 8 waves.)
   */
 object DoorSoak {
+  /** The graft session at a fixed 8 state partitions, whatever the cpus,
+    * so the per-wave state metrics compare across hosts and runs. */
+  private def session(app: String): SparkSession = {
+    val spark = GraftSession(app)
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    spark
+  }
+
   def main(args: Array[String]): Unit = {
     if (args.headOption.contains("crawl")) { crawlMain(args.drop(1)); return }
     if (args.headOption.contains("index")) { indexMain(args.drop(1)); return }
@@ -28,17 +37,7 @@ object DoorSoak {
     // from a larger table (0 = all) — the 200k ingest-door probe rides
     // the 500k graph-probe corpus
     val maxDocs = args.lift(2).map(_.toLong).getOrElse(0L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-door-soak")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session("graft-door-soak")
     import spark.implicits._
     import IngestDoor.DoorDoc
 
@@ -155,16 +154,7 @@ object DoorSoak {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val nWaves = args.lift(1).map(_.toInt).getOrElse(8)
     val sampleEvery = args.lift(2).map(_.toLong).getOrElse(0L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-index-soak")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session("graft-index-soak")
     import org.apache.spark.sql.functions.col
 
     val base = Files.createTempDirectory("graft_index_soak").toString
@@ -383,18 +373,7 @@ object DoorSoak {
   private def crawlMain(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val nWaves = args.lift(1).map(_.toInt).getOrElse(8)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-crawl-soak")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session("graft-crawl-soak")
 
     val base = Files.createTempDirectory("graft_crawl_soak").toString
     val media = graft.queries.ExtQueries.qx77Media(spark, sfDir).collect()

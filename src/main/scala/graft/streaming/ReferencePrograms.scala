@@ -7,6 +7,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
+import graft.GraftSession
+
 import Model._
 
 /** The reference's five executable programs, each as a live Structured
@@ -91,16 +93,7 @@ object ReferencePrograms {
   def main(args: Array[String]): Unit = {
     val program = args.headOption.getOrElse("all")
     val seconds = args.lift(1).map(_.toInt).getOrElse(10)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[4]"))
-      .appName(s"graft-reference-$program")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(s"graft-reference-$program")
     val programs: Map[String, Int => Unit] = Map(
       "average" -> (s => StreamingMain.run(spark, s, 100)),
       "basic" -> (s => basic(spark, s)),

@@ -6,6 +6,8 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
+import graft.GraftSession
+
 /** End-to-end streaming run of the reference's flagship program
   * (Q/AverageSensorReadings.java:61-79): SensorSource → °F→°C → per-sensor
   * 5 s tumbling event-time window average → console sink (K1), as a real
@@ -23,18 +25,7 @@ object StreamingMain {
     if (args.headOption.contains("crawl")) { crawlMain(args.lift(1)); return }
     val durationSec = args.headOption.map(_.toInt).getOrElse(15)
     val rowsPerSec = args.lift(1).map(_.toInt).getOrElse(100)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[4]"))
-      .appName("graft-average-sensor-readings")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // transformWithState (the SensorSource random walk) requires the
-      // RocksDB state store (F12).
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("graft-average-sensor-readings")
     run(spark, durationSec, rowsPerSec)
     spark.stop()
   }
@@ -71,16 +62,7 @@ object StreamingMain {
     * manifest is compacted into a hive-partitioned curated layout and
     * summarized on stdout. */
   def doorMain(outDirOpt: Option[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[4]"))
-      .appName("graft-ingest-door")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("graft-ingest-door")
     import spark.implicits._
     import graft.streaming.IngestDoor.DoorDoc
     import graft.functions.BloomFilter
@@ -157,16 +139,7 @@ object StreamingMain {
     * summary printed next to batch qx77's row (they must agree —
     * CrawlDoorSpec pins it under kill/restart too). */
   def crawlMain(outDirOpt: Option[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[4]"))
-      .appName("graft-crawl-door")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("graft-crawl-door")
     val sfDir = "/root/testdata/sf0.001"
     val base = outDirOpt.getOrElse(Files.createTempDirectory("graft_crawl").toString)
 

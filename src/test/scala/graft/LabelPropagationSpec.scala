@@ -115,6 +115,23 @@ class LabelPropagationSpec extends SparkTestBase {
       }
   }
 
+  test("a NULL warm-start label is absent on either side of the gate") {
+    // (0, NULL) starts node 0 at its own id, and (NULL, label) labels no
+    // node, on the local replay as in the distributed left join.
+    val nodesDf = spark.range(3).select(col("id").as("u"))
+    val edgesDf = Seq((0L, 1L), (1L, 2L)).toDF("u", "v")
+    val init = Seq[(Option[Long], Option[Long])]((Some(0L), None), (None, Some(2L)))
+      .toDF("u", "label")
+    val labels = for (max <- Seq(None, Some("0"))) yield
+      withConf(LabelPropagation.NodesGate.key, max) {
+        withConf(LabelPropagation.EdgesGate.key, max) {
+          LabelPropagation.run(nodesDf, edgesDf, 2, Some(init))
+            .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        }
+      }
+    assert(labels == Seq.fill(2)(runLpa(Seq((0L, 1L), (1L, 2L)), 3, 2)))
+  }
+
   test("self-inclusion damps the synchronous two-coloring oscillation") {
     // On the single edge 0-1 WITHOUT self votes labels would swap forever:
     // after any odd round {0->1, 1->0}, after even rounds back. With

@@ -58,6 +58,24 @@ class PageRankSpec extends SparkTestBase {
     assert(ranks == Seq(Seq.empty, Seq.empty))
   }
 
+  test("a NULL warm-start rank is absent on either side of the gate") {
+    // (0, NULL) starts node 0 at scale, and (NULL, r) ranks no node, on
+    // the local replay as in the distributed left join.
+    val nodes = Seq(0L, 1L, 2L).toDF("u")
+    val edges = Seq((0L, 1L), (1L, 2L)).toDF("u", "v")
+    val init = Seq[(Option[Long], Option[Long])]((Some(0L), None), (None, Some(5L))).toDF("u", "r")
+    val ranks = for (max <- Seq(None, Some("0"))) yield
+      withConf(PageRank.NodesGate.key, max) {
+        withConf(PageRank.EdgesGate.key, max) {
+          PageRank.run(nodes, edges, iters = 3, init = Some(init))
+            .collect().map(x => x.getLong(0) -> x.getLong(1)).toMap
+        }
+      }
+    val cold = PageRank.run(nodes, edges, iters = 3)
+      .collect().map(x => x.getLong(0) -> x.getLong(1)).toMap
+    assert(ranks == Seq(cold, cold))
+  }
+
   test("star-graph authority: the hub outranks every spoke") {
     // spokes all point at the hub; the hub links back to every spoke
     val nodes = (0L to 5L).toDF("u")

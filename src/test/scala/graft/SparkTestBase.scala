@@ -9,27 +9,17 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.concurrent.Eventually._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for all suites. transformWithState requires the
-  * RocksDB state store provider (F12 — the reference's RocksDB backend,
-  * 정리/5주차.md:113-141, is the same config-selected choice here). */
+/** Shared local session for all suites: the shipped [[GraftSession]]
+  * contract (UTC, extensions, nanosAsLong, the RocksDB state store that
+  * transformWithState requires) built from an empty environment, so the
+  * suite runs `local[4]` with 4 shuffle partitions and no forced gates
+  * whatever the caller's `SPARK_GRAFT_*` settings. */
 trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-tests")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    // testdata events.ts is parquet TIMESTAMP(NANOS) (see Tables).
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.extensions", "graft.plans.GraftExtensions")
+  lazy val spark: SparkSession = GraftSession.builder("graft-tests", Map.empty)
     // Keep saveAsTable artifacts (bucketing tests) out of the repo tree.
     .config("spark.sql.warehouse.dir",
       java.nio.file.Files.createTempDirectory("graft_warehouse").toString)
     .getOrCreate()
-
-  locally { spark.sparkContext.setLogLevel("WARN") }
 
   def tmpDir(prefix: String): String = {
     val d = Files.createTempDirectory(prefix).toFile
