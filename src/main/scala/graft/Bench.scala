@@ -1,7 +1,6 @@
 package graft
 import org.apache.spark.sql.Encoders
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions._
 
 import graft.streaming.Model._
 import graft.streaming.Pipelines
@@ -165,10 +164,7 @@ object Bench {
         implicit val sqlCtx = spark.sqlContext
         implicit val enc = Encoders.product[SensorEvent]
         val input = MemoryStream[SensorEvent]
-        val agg = Pipelines.withEventTime(input.toDS(), "5 seconds")
-          .withColumn("temp_c", (col("value") - 32) * 5.0 / 9.0)
-          .groupBy(col("sensor_id"), window(col("ts"), "5 seconds"))
-          .agg(avg("temp_c").as("avg_temp"))
+        val agg = Pipelines.windowAvg(input.toDS())
         val ckpt = java.nio.file.Files.createTempDirectory("graft_bench_ckpt").toString
         val q = agg.writeStream.format("memory").queryName(s"bench_throughput_$rep")
           .outputMode("update").option("checkpointLocation", ckpt).start()

@@ -48,7 +48,7 @@ object GraphAnn {
     * (full probe ⇒ the first beam cut IS the global top-k) and
     * 200/200 at the 200k probe's 2-probe regime; 0.90 leaves margin
     * for genuinely hard query draws while making a silent quality
-    * collapse fatal in DoorSoak/GraphProbe the way a nonzero rebuild
+    * collapse fatal in DoorSoak (index and graph modes) the way a nonzero rebuild
     * edge diff is. */
   val ServeRecallFloorMicro: Long = 900000L
 
@@ -162,8 +162,8 @@ object GraphAnn {
     * the serve EXACT — the faiss flat-below-the-knee discipline. Past
     * the tiny-grid knee the measured posture governs: 2×2 of a ≥1024-
     * cell trained grid read strict 200/200 at the 200k probe. (The
-    * k2 = 16 band in between is floor-guarded: DoorSoak/GraphProbe
-    * fail hard if its serve ever measures under
+    * k2 = 16 band in between is floor-guarded: DoorSoak's index and
+    * graph modes fail hard if its serve ever measures under
     * [[ServeRecallFloorMicro]].) Serving budget only — signatures,
     * admission, and the persisted asset are untouched, and the qx126
     * gate row keeps replaying the pinned 2-probe budget explicitly
@@ -309,7 +309,7 @@ object GraphAnn {
     * maintained [[GraphIndex]] costs per query set (qx109's shape).
     * Factored (round-14 review) so the three asset-vs-inline
     * comparison twins — IndexDoorSpec's bit-equality pin, DoorSoak's
-    * soak timing, GraphProbe's probe timing — share one spelling and
+    * index-soak and graph-wave timings — share one spelling and
     * cannot drift apart; a drifted copy would silently invalidate the
     * equality they exist to enforce. */
   def inlineServe(base: DataFrame, planes: Int, queries: DataFrame,

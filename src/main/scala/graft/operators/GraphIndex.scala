@@ -637,7 +637,7 @@ object GraphIndex {
 
   /** The asset-free INLINE serving twin under the asset's PINNED
     * generator — ONE meta-driven dispatch for every asset-vs-inline
-    * comparison (DoorSoak's soak check, GraphProbe's probe timing;
+    * comparison (DoorSoak's index soak and graph wave;
     * round 16 — the first cells soak measured what a hand-rolled copy
     * of this dispatch costs: its rebuild check replayed the WRONG
     * generator and read a permanent 2000-edge diff). `books`/`splits`

@@ -58,8 +58,9 @@ import graft.sources.Tables
   * ADC is the codegen'd `pq_adc` over the coded slice; exact refine on
   * top-32; the lexical leg joins the broadcast query-term lexicon
   * against the tf table with map-side `topk_by`.
-  * [[graft.HybridServeProbe]] records build-vs-serve seconds at the
-  * 100× corpus — build amortizes, serving is probe-bound. */
+  * HybridServeProbe (at commit `500eb2a`) recorded build-vs-serve
+  * seconds at the 100× corpus, and Bench's `qx79b_split` records them
+  * on every run — build amortizes, serving is probe-bound. */
 object HybridIndex {
 
   /** Hive partition count for the coded corpus: cells hash into this
@@ -122,8 +123,8 @@ object HybridIndex {
     * A subsequent [[search]] serves the union corpus bit-identically
     * to a frozen-codebook rebuild over it. Codebook drift under a
     * shifting corpus is the retrain trigger — measured by
-    * [[graft.RecallProbe]] and decided by [[RetrainTrigger]], not
-    * silently absorbed.
+    * the RecallProbe fixture (at commit `500eb2a`) and decided by
+    * [[RetrainTrigger]], not silently absorbed.
     *
     * `segKeyOpt` overrides the doc-range segment key — the streaming
     * door ([[graft.streaming.IndexDoor]]) passes `b<batchId>` so a

@@ -208,7 +208,9 @@ object ExtOracle {
   /** Shared trained-k-means CTE prefix (qx16 + qx38): seeds → two Lloyd
     * steps → final integer centroids → per-vector `assign`(vec_id, cid).
     * One Lloyd step from centroid CTE `cin` → `cout` (names
-    * parameterized so the two unrolled iterations share the SQL shape). */
+    * parameterized so the two unrolled iterations share the SQL shape).
+    * `assign` is MATERIALIZED: DuckDB otherwise inlines it, with the
+    * whole Lloyd chain, into every reference. */
   private val KMEANS_ASSIGN: String = {
     def step(cin: String, cout: String, i: Int): String =
       s"""cn$i AS (SELECT cid, sum(cval*cval) AS cn2 FROM $cin GROUP BY cid),
@@ -238,7 +240,7 @@ object ExtOracle {
        |cnf AS (SELECT cid, sum(cval*cval) AS cn2 FROM c2 GROUP BY cid),
        |adf AS (SELECT vec_id, cid, sum(val * cval) AS dot
        |        FROM dims JOIN c2 USING (d) GROUP BY vec_id, cid),
-       |assign AS (SELECT vec_id, cid FROM (
+       |assign AS MATERIALIZED (SELECT vec_id, cid FROM (
        |             SELECT vec_id, adf.cid,
        |                    row_number() OVER (PARTITION BY vec_id
        |                      ORDER BY (2*dot - cn2) DESC, adf.cid ASC) AS rn
@@ -1987,16 +1989,19 @@ object ExtOracle {
     val iters = 8
     val base =
       """WITH nodes AS (SELECT DISTINCT doc_id % 40 AS u FROM documents),
-        |e AS (SELECT DISTINCT u, v FROM (
+        |e AS MATERIALIZED (SELECT DISTINCT u, v FROM (
         |    SELECT doc_id % 40 AS u, (doc_id * 7 + 3) % 40 AS v FROM documents
         |    UNION ALL
         |    SELECT doc_id % 40 AS u, (doc_id * 13 + 11) % 40 AS v FROM documents) t
         |  WHERE u % 10 <> 7),
-        |deg AS (SELECT u, count(*) AS od FROM e GROUP BY u),
-        |nn AS (SELECT count(*) AS n FROM nodes),
-        |r0 AS (SELECT u, CAST(1000000 AS BIGINT) AS r FROM nodes)""".stripMargin
+        |deg AS MATERIALIZED (SELECT u, count(*) AS od FROM e GROUP BY u),
+        |nn AS MATERIALIZED (SELECT count(*) AS n FROM nodes),
+        |r0 AS MATERIALIZED (SELECT u, CAST(1000000 AS BIGINT) AS r FROM nodes)""".stripMargin
+    // every round but the last is read twice by its successor (the
+    // inflow and the dangling mass), so DuckDB would inline the chain
+    // exponentially unless each round is MATERIALIZED
     val its = (1 to iters).map { k =>
-      s"""r$k AS (
+      s"""r$k AS${if (k < iters) " MATERIALIZED" else ""} (
          |  SELECT nd.u,
          |    CAST(150000 + (85 * (coalesce(i.inc, 0) + dang.dg // (SELECT n FROM nn))) // 100
          |         AS BIGINT) AS r
@@ -3010,7 +3015,9 @@ object ExtOracle {
     * parenthesization), then R greedy steps as generated CTE quadruples
     * (gains from the current coverage, argmax pick under
     * (gain DESC, i ASC), selected-union, coverage update). All gain
-    * arithmetic in BIGINT so cross-row sums are order-free. */
+    * arithmetic in BIGINT so cross-row sums are order-free. `pr` is
+    * MATERIALIZED, like `assign`: inlined into every step, the pairwise
+    * sims outgrow a 16 GB host in DuckDB. */
   val qx100: String = {
     val c = graft.queries.ExtQueries.CoresetC
     val r = graft.queries.ExtQueries.CoresetR
@@ -3025,7 +3032,7 @@ object ExtOracle {
               |                 row_number() OVER (PARTITION BY cid ORDER BY sc DESC, vec_id ASC) AS rn
               |          FROM scv) t WHERE rn <= $c),
               |cvv AS (SELECT cap.cid, n.vec_id, n.v, n.n2 FROM cap JOIN n USING (vec_id)),
-              |pr AS (SELECT a.cid, a.vec_id AS i, b.vec_id AS j,
+              |pr AS MATERIALIZED (SELECT a.cid, a.vec_id AS i, b.vec_id AS j,
               |         CASE WHEN a.vec_id = b.vec_id THEN CAST(1000000000 AS BIGINT)
               |              ELSE CAST(floor((1e0 + (
               |                CAST(CAST(list_sum(list_transform(range(1, len(a.v) + 1), x -> a.v[x] * b.v[x])) AS BIGINT) AS DOUBLE)

@@ -817,8 +817,8 @@ object ExtQueries {
     * the banded-LSH serve (qx3) against the exact brute top-5 (qx2),
     * per-query overlap histogram plus the corpus recall in micro-units
     * on a −1 summary row. Until now serving-quality recall lived in
-    * probes and specs ([[graft.RecallProbe]], GraphAnnSpec); this row
-    * makes it a HASH-PINNED release number — the dashboard fact "what
+    * probes and specs (RecallProbe at commit `500eb2a`, GraphAnnSpec);
+    * this row makes it a HASH-PINNED release number — the dashboard fact "what
     * recall is the index actually serving" computed from the two
     * shared gate spellings, so it can never drift from the rows it
     * audits (the qx117 discipline applied to serving quality).
@@ -979,8 +979,8 @@ object ExtQueries {
     * actually serves qx79b/qx106b through the persisted HybridIndex)
     * against the exact brute top-5 (qx2), the qx118 fold verbatim
     * ([[recallAuditK]] — shared spelling, shared arithmetic). Until
-    * now IVFADC recall lived only in [[graft.RecallProbe]]'s fixture
-    * readings; this row makes the serving family's recall a
+    * now IVFADC recall lived only in the RecallProbe fixture's readings
+    * (at commit `500eb2a`); this row makes the serving family's recall a
     * HASH-PINNED release number that tracks exactly what the index
     * serves, at every SF the gate runs.
     *
@@ -3864,9 +3864,9 @@ object ExtQueries {
     * plus BM25 plus fusion — so the hash pins index-serving end to
     * end. Scale shape: the corpus-sized work is now probe-bound
     * (candidates ∝ cell occupancy, never n·q); measured recall of the
-    * fused list vs brute-force qx79 at equal budget is recorded by
-    * [[graft.RecallProbe]] (`hybrid` block). Query set = qx79's capped
-    * slice, so the two gates rank the same queries and diffing their
+    * fused list vs brute-force qx79 at equal budget was recorded by
+    * RecallProbe's `hybrid` block (at commit `500eb2a`). Query set =
+    * qx79's capped slice, so the two gates rank the same queries and diffing their
     * outputs measures the index's effect directly. */
   def qx79b(spark: SparkSession, dir: String): DataFrame = {
     // The BM25 leg is independent of the IVFADC build+serve — it now

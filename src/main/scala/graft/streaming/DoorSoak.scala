@@ -2,11 +2,15 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{broadcast, col, expr, lit, pmod}
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.GraftSession
 import graft.functions.BloomFilter
+import graft.operators.{GraphAnn, GraphIndex, HybridIndex}
 
 /** RocksDB SOAK of the composed ingest door (round-8 verdict #7): the
   * specs run the door at sf0.001 waves; this main pushes 10×–100×
@@ -18,6 +22,8 @@ import graft.functions.BloomFilter
   *
   * Usage: runMain graft.streaming.DoorSoak [sfDir] [waves]
   * (default /root/testdata/sf0.01 — 10× the spec corpus — in 8 waves.)
+  * The `index`, `crawl` and `graph` modes soak the index door, the crawl
+  * door and one graph-asset wave; each is documented at its method.
   */
 object DoorSoak {
   /** The graft session at a fixed 8 state partitions, whatever the cpus,
@@ -28,9 +34,103 @@ object DoorSoak {
     spark
   }
 
-  def main(args: Array[String]): Unit = {
-    if (args.headOption.contains("crawl")) { crawlMain(args.drop(1)); return }
-    if (args.headOption.contains("index")) { indexMain(args.drop(1)); return }
+  private def timed[A](f: => A): (A, Double) = {
+    val t0 = System.nanoTime()
+    val a = f
+    (a, (System.nanoTime() - t0) / 1e9)
+  }
+
+  /** One JSON line per state operator of `q`'s last micro-batch: Spark's
+    * own rows in state, state memory, RocksDB SST size, pinned block
+    * memory and commit latency, and the batch's addBatch time. */
+  private def stateLine(tag: String, wave: Int, q: StreamingQuery): Unit = {
+    val p = q.lastProgress
+    if (p == null) return
+    val addMs = Option(p.durationMs.get("addBatch")).map(_.toLong).getOrElse(-1L)
+    p.stateOperators.foreach { so =>
+      def metric(k: String) = Option(so.customMetrics.get(k)).map(_.toString).getOrElse("-1")
+      println(s"""{"stage":"$tag","wave":$wave,"op":"${so.operatorName}",""" +
+        s""""rows_in_state":${so.numRowsTotal},"state_bytes":${so.memoryUsedBytes},""" +
+        s""""sst_bytes":${metric("rocksdbSstFileSize")},""" +
+        s""""pinned_bytes":${metric("rocksdbPinnedBlocksMemoryUsage")},""" +
+        s""""rocksdb_commit_ms":${metric("rocksdbCommitLatencyMs")},"batch_add_ms":$addMs}""")
+    }
+  }
+
+  /** The heap envelope as JSON fields: Xmx plus the largest single heap
+    * pool's peak. Pools peak at different times, so a sum could exceed
+    * Xmx and mislead; completing the run under this Xmx is the primary
+    * evidence, the pool peak the supporting footprint number. */
+  private def heapFields: String = {
+    val peak = java.lang.management.ManagementFactory.getMemoryPoolMXBeans.asScala
+      .filter(_.getType == java.lang.management.MemoryType.HEAP)
+      .map(_.getPeakUsage.getUsed).max
+    s""""heap_max_gb":${"%.1f".format(Runtime.getRuntime.maxMemory / 1e9)},""" +
+      s""""heap_peak_pool_gb":${"%.1f".format(peak / 1e9)}"""
+  }
+
+  /** A graph-asset serve reading: `queries`, the asset serve and its
+    * inline twin's seconds, and how many served rank-1 rows match the
+    * brute-force top-1 strictly (same id) and tie-aware (same cosine). */
+  private case class ServeReading(queries: Long, assetSec: Double, inlineSec: Double,
+                                  strictHits: Long, tieHits: Long) {
+    def micro(hits: Long): Long = 1000000L * hits / math.max(1L, queries)
+  }
+
+  /** Serves `qs` from the graph asset and from its inline twin
+    * ([[GraphIndex.inlineServeTwin]], which replays the asset's pinned
+    * generator), requires equal row counts, then scores the asset's
+    * rank-1 rows against brute-force top-1 over `base`.
+    *
+    * Only the served rk = 1 row may claim a hit: counting a hit anywhere
+    * in the beam overstated serving quality. The strict metric is not
+    * floorable across corpus sizes: on small corpora several vectors tie
+    * at the exact maximum cosine and the beam may surface a tied id other
+    * than the globally smallest (GraphServeQualitySpec pins the sf0.01
+    * 4/10 strict reading as exactly that). So the floor rides the
+    * tie-aware metric, served cosine == brute max cosine (same
+    * expression, same integers: exact equality), and a real quality
+    * collapse fails the run at any corpus size. */
+  private def serveQuality(spark: SparkSession, idx: String, gDir: String,
+                           base: DataFrame, qs: DataFrame): ServeReading = {
+    val nq = qs.count()
+    val ((served, nServed), assetSec) = timed {
+      val s = GraphIndex.search(spark, idx, gDir, qs).localCheckpoint()
+      (s, s.count())
+    }
+    val (nInline, inlineSec) = timed {
+      GraphIndex.inlineServeTwin(spark, gDir, base, qs).count()
+    }
+    require(nServed == nInline,
+      s"asset serve row count diverged from the inline build: $nServed vs $nInline")
+    val brute = base.crossJoin(broadcast(qs))
+      .where(col("vec_id") =!= col("qid"))
+      .withColumn("dot", expr("long_dot(iv, qiv)"))
+      .withColumn("cosine", expr(graft.queries.ExtQueries.COSINE))
+      .groupBy("qid").agg(expr("element_at(topk_by(cosine, vec_id, 1), 1)").as("t"))
+      .select(col("qid"), col("t.id").as("nn"), col("t.score").as("maxc"))
+    val top1 = served.where(col("rk") === 1L)
+      .select(col("qid"), col("vec_id").as("snn"), col("cosine").as("scos"))
+      .join(brute, "qid").localCheckpoint()
+    val r = ServeReading(nq, assetSec, inlineSec,
+      strictHits = top1.where(col("snn") === col("nn")).count(),
+      tieHits = top1.where(col("scos") === col("maxc")).count())
+    require(r.micro(r.tieHits) >= GraphAnn.ServeRecallFloorMicro,
+      s"asset serving quality collapsed: tie-aware top1 recall ${r.tieHits}/$nq " +
+        s"< floor ${GraphAnn.ServeRecallFloorMicro} micro")
+    r
+  }
+
+  def main(args: Array[String]): Unit = args.headOption match {
+    case Some("crawl") => crawlMain(args.drop(1))
+    case Some("index") => indexMain(args.drop(1))
+    case Some("graph") => graphMain(args.drop(1))
+    case _             => ingestMain(args)
+  }
+
+  /** The composed ingest door ([[IngestDoor]]): gate, budget and pack
+    * stages, corpus backfill then `waves` live waves. */
+  private def ingestMain(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val nWaves = args.lift(1).map(_.toInt).getOrElse(8)
     // probe-scale runs (round 17, r16 verdict #5): cap the corpus read
@@ -77,21 +177,6 @@ object DoorSoak {
     val q3 = IngestDoor.packStage(spark, s"$base/budget", s"$base/packed",
       chunkLen = 256L, seqLen = 1024L, s"$base/ck3")
 
-    def stateLine(tag: String, wave: Int, q: StreamingQuery): Unit = {
-      val p = q.lastProgress
-      if (p == null) return
-      val commitMs = Option(p.durationMs.get("addBatch")).map(_.toLong).getOrElse(-1L)
-      p.stateOperators.foreach { so =>
-        val sst = Option(so.customMetrics.get("rocksdbSstFileSize")).map(_.toString).getOrElse("-1")
-        val pinned = Option(so.customMetrics.get("rocksdbPinnedBlocksMemoryUsage")).map(_.toString).getOrElse("-1")
-        val commitLatency = Option(so.customMetrics.get("rocksdbCommitLatencyMs")).map(_.toString).getOrElse("-1")
-        println(s"""{"stage":"$tag","wave":$wave,"op":"${so.operatorName}",""" +
-          s""""rows_in_state":${so.numRowsTotal},"state_bytes":${so.memoryUsedBytes},""" +
-          s""""sst_bytes":$sst,"pinned_bytes":$pinned,""" +
-          s""""rocksdb_commit_ms":$commitLatency,"batch_add_ms":$commitMs}""")
-      }
-    }
-
     // corpus backfill = wave 0, then live waves
     input.addData(corpus.map { case (id, lang, t) => DoorDoc(id, lang, t, is_new = false) })
     q1.processAllAvailable()
@@ -117,18 +202,7 @@ object DoorSoak {
     }
     q1.stop(); q2.stop(); q3.stop()
     val staged = spark.read.schema(IngestDoor.stagedSchema).parquet(s"$base/staged/batch=*").count()
-    // heap envelope, the doorcells spelling: completing under this Xmx
-    // is the primary evidence, the largest pool peak the footprint
-    val heapMaxGb = Runtime.getRuntime.maxMemory / 1e9
-    val heapPeakGb = {
-      import scala.jdk.CollectionConverters._
-      java.lang.management.ManagementFactory.getMemoryPoolMXBeans.asScala
-        .filter(_.getType == java.lang.management.MemoryType.HEAP)
-        .map(_.getPeakUsage.getUsed).max / 1e9
-    }
-    println(s"""{"stage":"done","admitted":$staged,"bloom_words":$mWords,""" +
-      s""""heap_max_gb":${"%.1f".format(heapMaxGb)},""" +
-      s""""heap_peak_pool_gb":${"%.1f".format(heapPeakGb)}}""")
+    println(s"""{"stage":"done","admitted":$staged,"bloom_words":$mWords,$heapFields}""")
     println(s"[soak] done: $staged admitted docs through the door")
     spark.stop()
   }
@@ -155,7 +229,6 @@ object DoorSoak {
     val nWaves = args.lift(1).map(_.toInt).getOrElse(8)
     val sampleEvery = args.lift(2).map(_.toLong).getOrElse(0L)
     val spark = session("graft-index-soak")
-    import org.apache.spark.sql.functions.col
 
     val base = Files.createTempDirectory("graft_index_soak").toString
     val idx = s"$base/index"; val bus = s"$base/bus"; val ck = s"$base/ck"
@@ -295,49 +368,8 @@ object DoorSoak {
       val qs = gBase.where(col("vec_id") % 50 === 0)
         .select(col("vec_id").as("qid"), col("iv").as("qiv"), col("n2").as("qn2"))
         .localCheckpoint()
-      t0 = System.nanoTime()
-      val assetBeam = graft.operators.GraphIndex.search(spark, idx, gDir, qs)
-        .localCheckpoint()
-      val nServed = assetBeam.count()
-      val assetSec = (System.nanoTime() - t0) / 1e9
-      t0 = System.nanoTime()
-      import org.apache.spark.sql.functions.{broadcast, expr}
-      // the inline twin replays the asset's pinned generator (round 16
-      // — the shared meta-driven dispatch, so the twin cannot drift)
-      val nInline = graft.operators.GraphIndex.inlineServeTwin(
-        spark, gDir, gBase, qs).count()
-      val inlineSec = (System.nanoTime() - t0) / 1e9
-      require(nServed == nInline,
-        s"asset serve row count diverged from the inline build: $nServed vs $nInline")
-      val brute1 = gBase.crossJoin(broadcast(qs))
-        .where(col("vec_id") =!= col("qid"))
-        .withColumn("dot", expr("long_dot(iv, qiv)"))
-        .withColumn("cosine", expr(graft.queries.ExtQueries.COSINE))
-        .groupBy("qid").agg(expr("element_at(topk_by(cosine, vec_id, 1), 1)").as("t"))
-        .select(col("qid"), col("t.id").as("nn"), col("t.score").as("maxc"))
-      // top1-vs-top1 (round 16, the GraphProbe advice fix applied here
-      // too): only the serve's rk = 1 row may claim the strict hit
-      val top1 = assetBeam.where(col("rk") === 1L)
-        .select(col("qid"), col("vec_id").as("snn"), col("cosine").as("scos"))
-        .join(brute1, "qid").localCheckpoint()
-      val hits = top1.where(col("snn") === col("nn")).count()
-      // TIE-AWARE quality recall + the ABSOLUTE floor (round 17, r16
-      // verdict #1): the strict metric is not floorable across corpus
-      // sizes — at soak scale several vectors routinely tie at the
-      // exact maximum cosine and the beam may surface a tied id other
-      // than the globally smallest (GraphServeQualitySpec pins the
-      // sf0.01 4/10 strict reading as exactly that), so a hit here is
-      // served-cosine == brute-max-cosine (same expression, same
-      // integers — exact equality). THIS metric carries the floor: a
-      // real quality collapse now kills the soak the way a nonzero
-      // rebuild edge diff does, instead of passing as a log line.
-      val qHits = top1.where(col("scos") === col("maxc")).count()
-      val nq = qs.count()
-      val qMicro = 1000000L * qHits / math.max(1L, nq)
-      println(f"""{"stage":"graph_serve","queries":$nq,"asset_sec":$assetSec%.2f,"inline_sec":$inlineSec%.2f,"recall_top1_micro":${1000000L * hits / math.max(1L, nq)},"recall_q_micro":$qMicro,"recall_floor_micro":${graft.operators.GraphAnn.ServeRecallFloorMicro}}""")
-      require(qMicro >= graft.operators.GraphAnn.ServeRecallFloorMicro,
-        s"asset serving quality collapsed: tie-aware top1 recall $qMicro micro " +
-          s"< floor ${graft.operators.GraphAnn.ServeRecallFloorMicro}")
+      val s = serveQuality(spark, idx, gDir, gBase, qs)
+      println(f"""{"stage":"graph_serve","queries":${s.queries},"asset_sec":${s.assetSec}%.2f,"inline_sec":${s.inlineSec}%.2f,"recall_top1_micro":${s.micro(s.strictHits)},"recall_q_micro":${s.micro(s.tieHits)},"recall_floor_micro":${GraphAnn.ServeRecallFloorMicro}}""")
     }
     // The per-epoch maintenance decision over exactly what the door
     // admitted — the RetrainTrigger loop run where it would run in
@@ -392,19 +424,6 @@ object DoorSoak {
     val qp = CrawlDoor.paceStage(spark, s"$base/frontier", s"$base/paced", s"$base/ckp")
     val q3 = CrawlDoor.dedupStage(spark, s"$base/paced", s"$base/manifest", s"$base/ck3")
 
-    def stateLine(tag: String, wave: Int, q: StreamingQuery): Unit = {
-      val p = q.lastProgress
-      if (p == null) return
-      val commitMs = Option(p.durationMs.get("addBatch")).map(_.toLong).getOrElse(-1L)
-      p.stateOperators.foreach { so =>
-        val commitLatency = Option(so.customMetrics.get("rocksdbCommitLatencyMs"))
-          .map(_.toString).getOrElse("-1")
-        println(s"""{"stage":"$tag","wave":$wave,"op":"${so.operatorName}",""" +
-          s""""rows_in_state":${so.numRowsTotal},"state_bytes":${so.memoryUsedBytes},""" +
-          s""""rocksdb_commit_ms":$commitLatency,"batch_add_ms":$commitMs}""")
-      }
-    }
-
     media.grouped(media.size / nWaves + 1).zipWithIndex.foreach { case (wave, i) =>
       val t0 = System.nanoTime()
       input.addData(wave)
@@ -433,6 +452,86 @@ object DoorSoak {
     // run must fail loudly if the politeness drain regresses.
     require(admitted == released,
       s"politeness drain regression: admitted=$admitted released=$released")
+    spark.stop()
+  }
+
+  /** `runMain graft.streaming.DoorSoak graph <sfDir> [deltaMod] [lsh|cells]`
+    * — the composed graph-asset wave at probe scale: [[HybridIndex]] on
+    * all but a delta, [[GraphIndex.init]] over the committed base under
+    * the chosen generator (default `lsh`), then ONE door-shaped wave —
+    * index addBatch + [[GraphIndex.admit]] (delta sigs, touched-node
+    * graph recompute, versioned commit) — the warm-started community
+    * refresh it amortizes over, and the [[serveQuality]] reading of the
+    * asset serve, floor included. One JSON line, with the heap envelope.
+    *
+    * Delta sizing: a positive `deltaMod` (default 7) is the steady-drip
+    * spelling, modulus deltaMod·100; a NEGATIVE one is the raw modulus
+    * (-4 → a 25% bulk wave, the admit-vs-rebuild knee's rebuild regime).
+    * Zero is refused: pmod(id, 0) is null, so the run would time a
+    * zero-vector delta and emit a plausible but meaningless line.
+    *
+    * The embeddings are NOISE over the corpus's vec_id domain: planted
+    * clusters make LSH buckets go quadratic (the qx113 finding), and the
+    * production answer for clustered spaces is the cells generator.
+    * No streaming state here, so the session keeps the [[GraftSession]]
+    * defaults instead of the soaks' fixed 8 partitions. */
+  private def graphMain(args: Array[String]): Unit = {
+    require(args.nonEmpty, "usage: DoorSoak graph <sfDir> [deltaMod] [lsh|cells]")
+    val d = args(0)
+    val deltaMod = args.lift(1).map(_.toLong).getOrElse(7L)
+    val gen = args.lift(2).getOrElse("lsh")
+    require(gen == "lsh" || gen == "cells", s"generator must be lsh or cells, got $gen")
+    require(deltaMod != 0L,
+      "deltaMod must be nonzero (positive = drip modulus deltaMod*100, negative = raw bulk modulus)")
+    val doorMod = if (deltaMod < 0) -deltaMod else deltaMod * 100L
+    val spark = GraftSession("graft-graph-door")
+    spark.range(1000).selectExpr("sum(id)").collect()
+
+    val docs = spark.read.parquet(s"$d/documents.parquet")
+      .select(col("doc_id"), col("text"))
+    val raw = spark.read.parquet(s"$d/embeddings.parquet")
+      .select(col("vec_id"))
+      .withColumn("embedding", expr(
+        """transform(sequence(0, 63), dd -> CAST(
+          |  ((vec_id * 1009 + dd * 31 + 3) * 2654435761 % 2147483647 % 721 - 360) / 1000.0
+          |AS FLOAT))""".stripMargin))
+    val nAll = raw.count()
+    val idx = Files.createTempDirectory("graft_gdoor_idx").toString
+    val gDir = Files.createTempDirectory("graft_gdoor_g").toString
+    val deltaPred = pmod(col("doc_id"), lit(doorMod)) === 3L
+    val deltaPredV = pmod(col("vec_id"), lit(doorMod)) === 3L
+    HybridIndex.build(spark, docs.where(!deltaPred), raw.where(!deltaPredV), idx)
+    val (_, initSec) = timed {
+      GraphIndex.init(spark, idx, gDir, expectedFinal = nAll, generator = gen)
+    }
+    val (_, admitIdxSec) = timed {
+      HybridIndex.addBatch(spark, idx, docs.where(deltaPred), raw.where(deltaPredV),
+        segKeyOpt = Some("b0"))
+    }
+    val nDelta = raw.where(deltaPredV).count()
+    // the per-batch leg: graph-only admission (touched-bound)
+    val (_, waveSec) = timed {
+      GraphIndex.admit(spark, idx, gDir, raw.where(deltaPredV).select(col("vec_id").as("id")), "b0")
+    }
+    // the amortized leg: community re-propagation is edge-linear per
+    // round, which is why it rides the compactEvery cadence
+    val (_, refreshSec) = timed { GraphIndex.refreshCommunities(spark, idx, gDir) }
+    val committed = HybridIndex.committedBase(spark, idx)
+    val qs = committed.where(pmod(col("vec_id"), lit(1000L)) === 0L)
+      .select(col("vec_id").as("qid"), col("iv").as("qiv"), col("n2").as("qn2"))
+      .localCheckpoint()
+    val s = serveQuality(spark, idx, gDir, committed, qs)
+    println(s"""{"n":$nAll,"n_delta":$nDelta,"generator":"$gen",""" +
+      s""""graph_init_sec":${"%.2f".format(initSec)},""" +
+      s""""index_admit_sec":${"%.2f".format(admitIdxSec)},""" +
+      s""""graph_wave_sec":${"%.2f".format(waveSec)},""" +
+      s""""community_refresh_sec":${"%.2f".format(refreshSec)},""" +
+      s""""serve_queries":${s.queries},""" +
+      s""""serve_asset_sec":${"%.2f".format(s.assetSec)},""" +
+      s""""serve_inline_sec":${"%.2f".format(s.inlineSec)},""" +
+      s""""recall_top1":"${s.strictHits}/${s.queries}",""" +
+      s""""recall_q":"${s.tieHits}/${s.queries}",""" +
+      s""""recall_floor_micro":${GraphAnn.ServeRecallFloorMicro},$heapFields,"sf":"$d"}""")
     spark.stop()
   }
 }

@@ -36,6 +36,16 @@ object Pipelines {
       .as[SensorEvent]
   }
 
+  /** K1 — the reference's flagship chain (Q/AverageSensorReadings.java:61-79):
+    * event time behind a 5 s watermark ([[withEventTime]]), the °F→°C map
+    * (T5), then the per-sensor 5 s tumbling event-time window average.
+    * Columns: sensor_id, window, avg_temp. */
+  def windowAvg(ds: Dataset[SensorEvent]): DataFrame =
+    withEventTime(ds, "5 seconds")
+      .withColumn("temp_c", (col("value") - 32) * 5.0 / 9.0)
+      .groupBy(col("sensor_id"), window(col("ts"), "5 seconds"))
+      .agg(avg("temp_c").as("avg_temp"))
+
   /** E9 — ingestion time: stamp arrival time as the event-time column
     * (the reference's IngestionTime characteristic, 정리/4주차.md:10-12).
     * Processing semantics downstream are identical to event time on the

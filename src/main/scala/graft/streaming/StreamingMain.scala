@@ -34,14 +34,7 @@ object StreamingMain {
     * shares one session across all five programs — only main() may stop it). */
   def run(spark: SparkSession, durationSec: Int, rowsPerSec: Int): Unit = {
     val checkpoint = Files.createTempDirectory("graft_flagship_ckpt").toString
-    val readings = SensorSource.stream(spark, rowsPerSec)
-      // °F→°C map (T5) then event-time + watermark (E1, 5 s bound —
-      // Q/util/SensorTimeAssigner.java:33).
-      .withColumn("temp_c", (col("value") - 32) * 5.0 / 9.0)
-      .withColumn("ts", timestamp_micros(col("ts_us")))
-      .withWatermark("ts", "5 seconds")
-      .groupBy(col("sensor_id"), window(col("ts"), "5 seconds"))
-      .agg(avg(col("temp_c")).as("avg_temp"))
+    val readings = Pipelines.windowAvg(SensorSource.stream(spark, rowsPerSec))
       .select(col("sensor_id"), col("window.end").as("window_end"), col("avg_temp"))
 
     val query = readings.writeStream

@@ -5,8 +5,8 @@ import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
 /** [[GraftSession]]: the one session contract, the forced-distributed
-  * mode it maps `SPARK_GRAFT_FORCE_DIST` to, and that no main builds a
-  * session of its own. */
+  * mode it maps `SPARK_GRAFT_FORCE_DIST` to, that no main builds a
+  * session of its own, and which objects are mains at all. */
 class GraftSessionSpec extends SparkTestBase {
 
   private val contract = Map(
@@ -51,5 +51,31 @@ class GraftSessionSpec extends SparkTestBase {
     val sites = files.filter(f =>
       builder.findFirstIn(new String(Files.readAllBytes(f), "UTF-8")).isDefined)
     assert(sites.map(_.getFileName.toString) == Seq("GraftSession.scala"))
+  }
+
+  test("a second suite's session creates no new warehouse directory") {
+    spark
+    val tmp = Paths.get(System.getProperty("java.io.tmpdir"))
+    def warehouses() = Files.list(tmp).iterator().asScala
+      .count(_.getFileName.toString.startsWith("graft_warehouse"))
+    val before = warehouses()
+    val other = new SparkTestBase {}
+    assert(other.spark eq spark)
+    assert(warehouses() == before)
+  }
+
+  test("src/main has exactly the eight listed entry points") {
+    val objectDecl = """\bobject\s+(\w+)""".r
+    val mainDecl = """\bdef\s+main\s*\(""".r
+    val files = Files.walk(Paths.get("src/main/scala")).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    val mains = files.flatMap { f =>
+      val src = new String(Files.readAllBytes(f), "UTF-8")
+      mainDecl.findAllMatchIn(src).map { m =>
+        objectDecl.findAllMatchIn(src.take(m.start)).map(_.group(1)).toSeq.last
+      }
+    }
+    assert(mains.sorted == Seq("Bench", "DoorSoak", "Explain", "ProbeGen",
+      "ReferencePrograms", "ReleaseGate", "StreamingMain", "Verify"))
   }
 }

@@ -31,7 +31,7 @@ import graft.operators.{GraphAnn, GraphIndex, HybridIndex, IvfAnn}
   * global top-k — exact serving, the faiss flat-below-the-knee
   * discipline). Under the door default the same corpus serves 10/10
   * strict AND tie-aware, clearing [[GraphAnn.ServeRecallFloorMicro]]
-  * — the absolute floor DoorSoak/GraphProbe now enforce at serve
+  * — the absolute floor DoorSoak's index and graph modes enforce at serve
   * time. qx126 keeps replaying the 2-probe budget explicitly, so the
   * gate row still oracle-pins the probe/graph/beam machinery. */
 class GraphServeQualitySpec extends SparkTestBase {

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.{IvfAnn, ProductQuantizer}
@@ -8,12 +9,32 @@ import graft.operators.{IvfAnn, ProductQuantizer}
   * and determinism invariants, and the qx44 premise — residuals against
   * the TRAINED coarse quantizer carry much less energy than the raw
   * vectors (against the hashed ±1000 centers they would not shrink at
-  * all, which is why qx44 exists). Recall itself is measured by the
-  * RecallProbe fixture, not asserted here (thresholds would be flaky);
-  * these tests pin the structural contracts the fixture relies on. */
+  * all, which is why qx44 exists). Recall itself is checked in-band by
+  * the qx118–qx124 audit rows, not asserted here (thresholds would be
+  * flaky); these tests pin the structural contracts the codec relies
+  * on. */
 class ProductQuantizerSpec extends SparkTestBase {
 
-  private def corpus(n: Long) = RecallProbe.clusteredCorpus(spark, n, 20, 500)
+  /** (vec_id, iv, n2) with `clusters` planted clusters, built from pure
+    * integer expressions over `spark.range(n)` (no RNG):
+    *   center(c, d) = qr(c·1000003 + d·97 + 5) mod 2001 − 1000   (±1000)
+    *   noise(v, d)  = qr(v·1000003 + d·97 + 7) mod (2·ns+1) − ns (±ns)
+    *   iv(v, d)     = center(v mod clusters, d)·1000 + noise(v, d)·1000
+    * where qr(h) = (h mod p)² mod p, p = 2³¹−1. */
+  private def clusteredCorpus(n: Long, clusters: Int, noiseScale: Int): DataFrame =
+    spark.range(n).select(
+      col("id").as("vec_id"),
+      expr(s"""transform(sequence(0, 63), d -> (
+          (((id % $clusters) * 1000003 + d * 97 + 5) % 2147483647) *
+          (((id % $clusters) * 1000003 + d * 97 + 5) % 2147483647)
+          % 2147483647 % 2001 - 1000) * 1000L + (
+          ((id * 1000003 + d * 97 + 7) % 2147483647) *
+          ((id * 1000003 + d * 97 + 7) % 2147483647)
+          % 2147483647 % ${2 * noiseScale + 1} - $noiseScale) * 1000L
+        )""").as("iv"))
+      .withColumn("n2", expr("long_dot(iv, iv)"))
+
+  private def corpus(n: Long) = clusteredCorpus(n, 20, 500)
 
   test("codes are M in-range entries per vector and rebuild identically") {
     val base = corpus(2000)
@@ -36,7 +57,7 @@ class ProductQuantizerSpec extends SparkTestBase {
     // to ~20% — measured while writing this test). n = 8000 derives
     // 8²=64 cells for 10 clusters: the intended regime.
     val n = 8000L
-    val base = RecallProbe.clusteredCorpus(spark, n, 10, 500).persist()
+    val base = clusteredCorpus(n, 10, 500).persist()
     val k = IvfAnn.imiCentroidsFor(n)
     val tBooks = IvfAnn.trainedImiCodebooks(base, k, iters = 2)
     val tCells = IvfAnn.imiCellsL2(base, tBooks, k)

@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path}
 
 import scala.concurrent.duration._
 
@@ -15,11 +15,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * suite runs `local[4]` with 4 shuffle partitions and no forced gates
   * whatever the caller's `SPARK_GRAFT_*` settings. */
 trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
-  lazy val spark: SparkSession = GraftSession.builder("graft-tests", Map.empty)
-    // Keep saveAsTable artifacts (bucketing tests) out of the repo tree.
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft_warehouse").toString)
-    .getOrCreate()
+  lazy val spark: SparkSession = SparkTestBase.session
 
   def tmpDir(prefix: String): String = {
     val d = Files.createTempDirectory(prefix).toFile
@@ -60,5 +56,22 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
   override protected def afterAll(): Unit = {
     // Session is shared across suites in one forked JVM; do not stop it.
     super.afterAll()
+  }
+}
+
+object SparkTestBase {
+  /** The one session of the JVM, built once: its warehouse directory
+    * (where the bucketing tests' saveAsTable artifacts land, out of the
+    * repo tree) is created once and deleted with its contents when the
+    * JVM exits. */
+  lazy val session: SparkSession = {
+    val warehouse = Files.createTempDirectory("graft_warehouse")
+    sys.addShutdownHook {
+      Files.walk(warehouse).sorted(java.util.Comparator.reverseOrder[Path]())
+        .forEach(p => Files.deleteIfExists(p))
+    }
+    GraftSession.builder("graft-tests", Map.empty)
+      .config("spark.sql.warehouse.dir", warehouse.toString)
+      .getOrCreate()
   }
 }

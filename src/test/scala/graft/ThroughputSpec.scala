@@ -101,10 +101,7 @@ class ThroughputSpec extends SparkTestBase {
       implicit val sqlCtx = spark.sqlContext
       implicit val enc = Encoders.product[SensorEvent]
       val input = MemoryStream[SensorEvent]
-      val agg = Pipelines.withEventTime(input.toDS(), "5 seconds")
-        .withColumn("temp_c", (col("value") - 32) * 5.0 / 9.0)
-        .groupBy(col("sensor_id"), window(col("ts"), "5 seconds"))
-        .agg(avg("temp_c").as("avg_temp"))
+      val agg = Pipelines.windowAvg(input.toDS())
       val q = agg.writeStream.format("memory").queryName(s"throughput_q$run")
         .outputMode("update").option("checkpointLocation", tmpDir(s"ckpt_tp$run")).start()
       val events = (0 until target * 10).map { i => // 10 simulated seconds
